@@ -9,9 +9,12 @@ system of record (exactly-once per batch).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -28,6 +31,15 @@ from flink_realtime_data_warehouse_spark.streaming.table_format import (
     FORMAT,
     atomic_write_text,
 )
+
+
+def _start(writer, available_now: bool):
+    """Start a configured ``DataStreamWriter``: drain what is available
+    and stop (``available_now``), or run on the default processing-time
+    trigger until stopped."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def base_log_job(
@@ -118,20 +130,18 @@ def base_log_job(
     # writes corrected log + all five splits from it (the reference is
     # likewise a single job; a second query would run a second copy of
     # the ST1 state store over a second source read)
-    q1 = (
+    q1 = _start(
         corrected.writeStream.foreachBatch(_write_splits)
-        .option("checkpointLocation", os.path.join(checkpoint_root, "split"))
-        .trigger(availableNow=available_now)
-        .start()
+        .option("checkpointLocation", os.path.join(checkpoint_root, "split")),
+        available_now,
     )
     queries.append(q1)
-    q3 = (
+    q3 = _start(
         dirty.writeStream.format("parquet")
         .option("path", os.path.join(out_root, "dirty_log"))
         .option("checkpointLocation", os.path.join(checkpoint_root, "dirty"))
-        .outputMode("append")
-        .trigger(availableNow=available_now)
-        .start()
+        .outputMode("append"),
+        available_now,
     )
     queries.append(q3)
     return queries
@@ -156,13 +166,12 @@ def unique_visitor_job(
         F.col("ts"),
     )
     uv = daily_unique_visitors(flat)
-    return (
+    return _start(
         uv.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=available_now)
-        .start()
+        .outputMode("append"),
+        available_now,
     )
 
 
@@ -186,13 +195,12 @@ def user_jump_job(
     # reference uses a monotonous (0-delay) watermark, DwdTrafficUserJumpDetail.java:71-82
     watermarked = paged.withWatermark("event_time", "0 seconds")
     bounces = detect_bounces(watermarked)
-    return (
+    return _start(
         bounces.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=available_now)
-        .start()
+        .outputMode("append"),
+        available_now,
     )
 
 
@@ -237,14 +245,13 @@ def unique_visitor_job_idiomatic(
     uv = flat.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
         ["mid", "dt"]
     )
-    return (
+    return _start(
         uv.drop("event_time")
         .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=available_now)
-        .start()
+        .outputMode("append"),
+        available_now,
     )
 
 
@@ -311,13 +318,12 @@ def stream_stream_conversion_job(
         F.col("action.item").alias("cart_item"),
         "action_ts",
     )
-    return (
+    return _start(
         joined.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=available_now)
-        .start()
+        .outputMode("append"),
+        available_now,
     )
 
 
@@ -380,11 +386,10 @@ def start_streaming_decontam(
         )
         _sink(joined.filter(flagged), quarantine_path)
 
-    q = (
+    q = _start(
         doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        available_now,
     )
     q._frdw_caches = [grams_cached]
     return q
@@ -471,11 +476,10 @@ def start_training_ingest_pipeline(
             scored.filter(~flagged & ~low_q).drop("contaminated"), "clean"
         )
 
-    q = (
+    q = _start(
         deduped.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        available_now,
     )
     q._frdw_caches = [grams_cached]
     return q
@@ -501,7 +505,6 @@ def _incarnation_id(checkpoint: str) -> str:
     exclusive ``os.link``), so a concurrent second starter or a crash
     mid-mint can never observe a partial/empty id: the link only
     appears after the temp file is fully written and fsynced."""
-    import os
     import uuid
 
     path = checkpoint
@@ -552,13 +555,8 @@ def compact_ann_ivf_deltas(
     stays idempotent. At lake scale the merge would rewrite only the
     cells the tail actually touches; the whole-store rewrite here
     keeps the crash story one rename-swap."""
-    import os
-
     from flink_realtime_data_warehouse_spark.operators.similarity import (
         _invalidate_index_df,
-    )
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
     )
 
     cells = os.path.join(index_root, "cells")
@@ -650,9 +648,6 @@ def start_embedding_ingest(
         build_ann_ivf_index,
         ivf_assign_delta,
     )
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
 
     nl = n_list if n_list is not None else IVF_NLIST
     cells = os.path.join(index_root, "cells")
@@ -683,8 +678,6 @@ def start_embedding_ingest(
             # re-parsed the JSON source and re-ran the dropDuplicates
             # shuffle. Persist the deduplicated batch for the build's
             # lifetime so those passes scan the cache instead.
-            from pyspark import StorageLevel
-
             vecs = vecs.persist(StorageLevel.MEMORY_AND_DISK)
             # clear a half-built attempt, then deterministic rebuild
             os.makedirs(index_root, exist_ok=True)
@@ -726,11 +719,10 @@ def start_embedding_ingest(
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_ann_ivf_deltas(spark, index_root, exclude_pbatch=pbatch)
 
-    return (
+    return _start(
         emb_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        available_now,
     )
 
 
@@ -749,20 +741,15 @@ def compact_history_digest_store(
     digests. Crash-safe via the shared rename-swap +
     ``_repair_swap_dir`` sweep, which the ingest's digest reads also
     run before their existence probes."""
-    import os
-
     from flink_realtime_data_warehouse_spark.operators.dedup import (
         COMPACTED_PBATCH,
-    )
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
     )
 
     store = os.path.join(out_root, "digests")
     FORMAT.repair(out_root, store)
     if not FORMAT.exists(store):
         return
-    src = FORMAT.read(spark, store, "content_hash string, pbatch string")
+    src = FORMAT.read(spark, store, _DIGESTS_SCHEMA)
     keep = (
         src.filter(F.col("pbatch") == exclude_pbatch)
         if exclude_pbatch is not None
@@ -791,12 +778,8 @@ def compact_history_digest_store(
     # (false negatives). Written BEFORE the store swap: a crash
     # between costs at most one spurious rebuild, never a subset probe.
     bloom_path = os.path.join(out_root, "bloom")
-    side_text = FORMAT.read_sidecar(bloom_path, "_covered.json")
-    if side_text is not None:
-        try:
-            covered = set(json.loads(side_text))
-        except ValueError:
-            covered = set()
+    covered = _bloom_covered(bloom_path)
+    if covered is not None:
         folded_parts = set(FORMAT.list_partitions(store, "pbatch")) - (
             {exclude_pbatch} if exclude_pbatch is not None else set()
         )
@@ -808,6 +791,309 @@ def compact_history_digest_store(
             bloom_path, "_covered.json", json.dumps(sorted(new_covered))
         )
     FORMAT.commit_swap(store, tmp)
+
+
+# ---------------------------------------------------------------------------
+# history-dedup ingest: one persisted read of each micro-batch, then named
+# stages in a fixed order (see start_history_dedup_ingest)
+# ---------------------------------------------------------------------------
+
+#: explicit schemas on every store read: a zero-row batch's
+#: dynamic-overwrite write creates the store directory with no data
+#: files, and schema inference on it would fail the next batch
+_DIGESTS_SCHEMA = "content_hash string, pbatch string"
+_LSH_DF_SCHEMA = "s bigint, df bigint, pbatch string"
+_LSH_BANDS_SCHEMA = "doc_id bigint, band int, key string, pbatch string"
+#: Bloom rebuild-with-slack factor: OR-updates consume the headroom, then
+#: one rebuild re-sizes — amortized O(1) rebuild work per key
+_BLOOM_HEADROOM = 4
+
+
+@dataclass
+class _IngestBatch:
+    """Per-batch context the ingest stages share: the lake root, the
+    batch's ``pbatch`` partition value, and the relations persisted for
+    the batch (released when it ends)."""
+
+    spark: SparkSession
+    out_root: str
+    pbatch: str
+    cached: list = field(default_factory=list)
+
+    def path(self, store: str) -> str:
+        return os.path.join(self.out_root, store)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self.cached.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return self.cached[-1]
+
+    def stage(self, name: str) -> None:
+        """Name the Spark jobs that follow ``ingest:<name> <pbatch>``."""
+        self.spark.sparkContext.setJobDescription(f"ingest:{name} {self.pbatch}")
+
+
+def _bloom_covered(bloom_path: str) -> set[str] | None:
+    """Digest partitions the Bloom filter provably covers: the
+    ``_covered.json`` watermark committed with every filter swap. None
+    when the store has no watermark; an unparsable one covers nothing."""
+    text = FORMAT.read_sidecar(bloom_path, "_covered.json")
+    if text is None:
+        return None
+    try:
+        return set(json.loads(text))
+    except ValueError:
+        return set()
+
+
+def _read_history(b: _IngestBatch, store: str, schema: str) -> DataFrame:
+    """Committed rows of ``store`` minus the in-flight batch's own
+    partition. A half-finished swap is repaired before the existence
+    probe, so only a store that does not exist yet reads empty. The
+    filter is null-safe: rows of a store compacted out of band
+    (``pbatch`` NULL) stay history."""
+    path = b.path(store)
+    FORMAT.repair(os.path.dirname(path), path)
+    if not FORMAT.exists(path):
+        return b.spark.createDataFrame([], schema)
+    return FORMAT.read(b.spark, path, schema).filter(
+        ~F.col("pbatch").eqNullSafe(b.pbatch)
+    )
+
+
+def _sink(b: _IngestBatch, df: DataFrame, store: str) -> None:
+    """Write ``df`` as the batch's ``pbatch`` partition of ``store``; a
+    replay overwrites its own first attempt. The sink relations read
+    persisted parents, whose partitioning AQE leaves alone, so the
+    REBALANCE hint is what sizes the writer by bytes (one file for a
+    tiny batch instead of one per cached partition)."""
+    FORMAT.overwrite_partitions(
+        df.withColumn("pbatch", F.lit(b.pbatch)).hint("rebalance"),
+        b.path(store),
+        "pbatch",
+    )
+
+
+def _swap_write_bloom(b: _IngestBatch, rows: DataFrame, covered: set[str]) -> None:
+    """Atomically replace the Bloom store with ``rows``. The
+    ``_covered.json`` watermark is written inside the staged tree, so
+    filter bits and watermark commit together."""
+    bloom = b.path("bloom")
+    tmp = FORMAT.stage_path(bloom)
+    rows.write.mode("overwrite").parquet(tmp)
+    with open(os.path.join(tmp, "_covered.json"), "w") as f:
+        json.dump(sorted(covered), f)
+    FORMAT.commit_swap(bloom, tmp)
+
+
+def _rebuild_bloom(b: _IngestBatch, new_digests: DataFrame | None = None) -> None:
+    """Build the filter with fresh headroom from the digest history,
+    plus ``new_digests`` (the in-flight batch's) when given; only then
+    does the watermark cover the in-flight partition."""
+    from flink_realtime_data_warehouse_spark.operators import dedup
+
+    digests = _read_history(b, "digests", _DIGESTS_SCHEMA).select("content_hash")
+    covered = set(FORMAT.list_partitions(b.path("digests"), "pbatch")) - {b.pbatch}
+    if new_digests is not None:
+        digests = digests.unionByName(new_digests)
+        covered.add(b.pbatch)
+    rows = dedup.build_bloom_membership(digests, headroom=_BLOOM_HEADROOM)
+    _swap_write_bloom(b, rows, covered)
+
+
+def _classify(b: _IngestBatch, docs: DataFrame, bloom_prefilter: bool) -> DataFrame:
+    """Stage ``classify``: ``docs`` plus each document's ``status``
+    (``new``, ``dup_batch`` or ``dup_history``), persisted. Digests the
+    Bloom filter rules out skip the digest join; a digest's copies all
+    land in one slice, so the statuses are those of the plain join."""
+    from flink_realtime_data_warehouse_spark.operators import dedup
+
+    b.stage("classify")
+    no_history = b.spark.createDataFrame([], "content_hash string")
+    bloom, digests = b.path("bloom"), b.path("digests")
+    if bloom_prefilter:
+        FORMAT.repair(b.out_root, bloom)
+        FORMAT.repair(b.out_root, digests)
+        if FORMAT.exists(digests) and (
+            not FORMAT.exists(bloom)
+            # the digest store holds partitions the watermark never
+            # covered (batches ingested with the flag off, or a fold of
+            # them): probing that subset filter would read ingested
+            # documents as new
+            or set(FORMAT.list_partitions(digests, "pbatch"))
+            - (_bloom_covered(bloom) or set())
+        ):
+            _rebuild_bloom(b)
+    if bloom_prefilter and FORMAT.exists(bloom):
+        flagged = b.persist(
+            dedup.probe_bloom_membership(
+                docs.select("doc_id", "content_hash"),
+                FORMAT.read(b.spark, bloom, dedup._BLOOM_SCHEMA),
+            )
+        )
+        maybe = flagged.filter("maybe_dup")
+        # a batch with no "maybe" row never scans the digest store
+        history = (
+            _read_history(b, "digests", _DIGESTS_SCHEMA)
+            if maybe.limit(1).count()
+            else no_history
+        )
+        clear = flagged.filter(~F.col("maybe_dup"))
+        statuses = dedup.incremental_dedup_digests(maybe, history).unionByName(
+            dedup.incremental_dedup_digests(clear, no_history)
+        )
+    else:  # no filter (flag off, or a cold lake): every digest joins history
+        statuses = dedup.incremental_dedup_digests(
+            docs, _read_history(b, "digests", _DIGESTS_SCHEMA)
+        )
+    return b.persist(docs.join(statuses.select("doc_id", "status"), "doc_id"))
+
+
+def _route_and_sink(
+    b: _IngestBatch, classified: DataFrame, respect_tombstones: bool, redact_pii: bool
+) -> DataFrame:
+    """Stage ``route``: write ``clean`` and ``dups`` and return the new
+    documents for the gate. The stored payload is redacted, never the
+    classified bytes; its pre-redaction digest stays beside it so a
+    takedown can match it back to the digest store."""
+    b.stage("route")
+    is_new = F.col("status") == "new"
+    rows = classified
+    tombstones = b.path("_tombstones")
+    if respect_tombstones and FORMAT.exists(tombstones):
+        tomb = FORMAT.read(b.spark, tombstones, "doc_id bigint").distinct()
+        rows = rows.join(F.broadcast(tomb), "doc_id", "left_anti")
+    clean = rows.filter(is_new).drop("status")
+    if redact_pii:
+        from flink_realtime_data_warehouse_spark.operators.pii import redact_text
+
+        clean = clean.withColumn("text", redact_text(F.col("text")))
+    else:
+        clean = clean.drop("content_hash")
+    _sink(b, clean, "clean")
+    _sink(b, rows.filter(~is_new).select("doc_id", "content_hash", "status"), "dups")
+    return rows.filter(is_new).select("doc_id", "text")
+
+
+def _update_bloom(b: _IngestBatch, new_digests: DataFrame) -> None:
+    """Stage ``bloom``: fold the batch's new digests into the filter
+    BEFORE its digest partition lands. OR-update while every touched
+    filter partition has sizing slack; rebuild with fresh headroom the
+    moment one would overflow."""
+    from flink_realtime_data_warehouse_spark.operators import dedup
+
+    b.stage("bloom")
+    bloom = b.path("bloom")
+    new_digests = new_digests.filter(F.col("content_hash").isNotNull()).distinct()
+    if FORMAT.exists(bloom):
+        pkey = F.pmod(F.xxhash64("content_hash"), F.lit(dedup.BLOOM_PARTS)).cast("int")
+        counts = dict(new_digests.groupBy(pkey).count().collect())
+        if not counts:
+            return  # nothing new; the filter is already current
+        # keys each filter partition can still take at its sizing; a
+        # pkey without a row gets the 64-bit minimum
+        slack = {
+            r.pkey: r.m_bits // dedup.BLOOM_BITS_PER_KEY - r.n_keys
+            for r in FORMAT.read(b.spark, bloom, dedup._BLOOM_SCHEMA)
+            .select("pkey", "n_keys", "m_bits")
+            .collect()
+        }
+        fresh_slack = 64 // dedup.BLOOM_BITS_PER_KEY
+        if slack and all(c <= slack.get(pk, fresh_slack) for pk, c in counts.items()):
+            rows = dedup.or_bloom_membership(
+                FORMAT.read(b.spark, bloom, dedup._BLOOM_SCHEMA), new_digests
+            )
+            digest_parts = FORMAT.list_partitions(b.path("digests"), "pbatch")
+            _swap_write_bloom(b, rows, set(digest_parts) | {b.pbatch})
+            return
+    _rebuild_bloom(b, new_digests)
+
+
+def _near_dup_gate(b: _IngestBatch, new_docs: DataFrame) -> None:
+    """Stage ``gate``: band the new documents with shingles capped at
+    the accumulated df (stored deltas plus this batch's), write band
+    collisions with stored bands to ``near_dups`` as evidence, and add
+    the batch's bands and df delta to the ``lsh`` stores."""
+    from flink_realtime_data_warehouse_spark.fanout import fanout
+    from flink_realtime_data_warehouse_spark.operators import dedup
+
+    b.stage("gate")
+    # one persisted shingle relation feeds the df delta, the hot set and
+    # the bands; the fan-out runs the explode wide, since a micro-batch
+    # is typically one source file and so one scan task
+    sh = b.persist(
+        dedup._exploded_shingle_hashes(fanout(new_docs, "doc_id")).distinct()
+    )
+    stored_df = _read_history(b, "lsh/df", _LSH_DF_SCHEMA)
+    sh_capped, delta = dedup._capped_batch_shingles(
+        new_docs, stored_df, dedup.NGRAM_DF_CAP, sh=sh
+    )
+    # the probe join and the band sink both read the bands; persisting
+    # them runs the minhash aggregation (MINHASH_K = 12 mins per
+    # document over its exploded shingles) once per batch
+    bands = b.persist(dedup._bands_from_shingles(sh_capped))
+    hist = _read_history(b, "lsh/bands", _LSH_BANDS_SCHEMA)
+    near = (
+        bands.alias("n")
+        .join(
+            hist.alias("h"),
+            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
+        )
+        .select(F.col("n.doc_id").alias("doc_id"), F.col("h.doc_id").alias("doc_hist"))
+        .distinct()
+    )
+    _sink(b, near, "near_dups")
+    _sink(b, bands, "lsh/bands")
+    _sink(b, delta, "lsh/df")
+
+
+def _ingest_batch(
+    batch: DataFrame,
+    batch_id: int,
+    *,
+    spark: SparkSession,
+    out_root: str,
+    run_id: str,
+    near_dup_gate: bool,
+    compact_every: int | None,
+    respect_tombstones: bool,
+    bloom_prefilter: bool,
+    redact_pii: bool,
+) -> None:
+    """One micro-batch of ``start_history_dedup_ingest``: persist the
+    deduplicated documents once, then run the stages in order."""
+    from flink_realtime_data_warehouse_spark.operators import dedup
+
+    sc = spark.sparkContext
+    engine_description = sc.getLocalProperty("spark.job.description")
+    b = _IngestBatch(spark, out_root, f"{run_id}-{batch_id}")
+    try:
+        docs = b.persist(
+            batch.dropDuplicates(["doc_id"]).select(
+                "doc_id", "text", F.md5("text").alias("content_hash")
+            )
+        )
+        classified = _classify(b, docs, bloom_prefilter)
+        new_docs = _route_and_sink(b, classified, respect_tombstones, redact_pii)
+        new_digests = classified.filter(F.col("status") == "new").select("content_hash")
+        if bloom_prefilter:
+            _update_bloom(b, new_digests)
+        b.stage("digests")
+        _sink(b, new_digests, "digests")
+        if near_dup_gate:
+            _near_dup_gate(b, new_docs)
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            b.stage("compact")
+            compact_history_digest_store(spark, out_root, exclude_pbatch=b.pbatch)
+            if near_dup_gate:
+                dedup.compact_dedup_lsh_index_capped(
+                    spark, b.path("lsh"), exclude_pbatch=b.pbatch
+                )
+    finally:
+        # newest first: unpersisting a relation re-plans every cached
+        # relation built on it
+        for df in reversed(b.cached):
+            df.unpersist()
+        sc.setJobDescription(engine_description)
 
 
 def start_history_dedup_ingest(
@@ -824,509 +1110,69 @@ def start_history_dedup_ingest(
 ):
     """Continuous ingest with GLOBAL dedup against everything ever
     ingested — the streaming face of
-    ``operators/dedup.py::incremental_dedup``.
+    ``operators/dedup.py::incremental_dedup``. New documents land in
+    ``{out_root}/clean``, duplicates with their status in
+    ``{out_root}/dups``, and new digests in ``{out_root}/digests``.
+    The digest store remembers forever, across restarts and new
+    checkpoints (a re-submitted corpus routes to ``dups``).
 
-    ``redact_pii=True`` scrubs the STORED payload with the shared
-    redaction expression (operators/pii.py::redact_text — email/IPv4/
-    phone spans → typed placeholders) so no PII ever lands in the
-    lake, while classification stays on the ORIGINAL bytes: digests,
-    the Bloom probe, and the near-dup gate's shingles all see
-    pre-redaction content, so a re-crawl of the raw document still
-    classifies ``dup_history`` even though the lake never stored its
-    raw form (pinned in tests/test_pii.py). Registry row
-    ``lake_pii_scrubbed_ingest`` states the composed election +
-    redaction semantics under one oracle.
+    Each micro-batch persists its deduplicated documents (``doc_id``,
+    ``text``, ``content_hash``) once, so the source is read once, and
+    runs these stages in order, each naming its Spark jobs
+    ``ingest:<stage> <pbatch>``:
 
-    Each micro-batch is classified against a persistent digest store:
+    1. ``classify`` — digest join; with ``bloom_prefilter`` a Bloom
+       probe first, so an all-new batch never reads the digest store.
+    2. ``route`` — the ``clean`` and ``dups`` sinks, after the
+       ``respect_tombstones`` anti-join, with ``redact_pii`` scrubbing
+       the stored payload.
+    3. ``bloom`` — fold the new digests into the filter
+       (``bloom_prefilter``).
+    4. ``digests`` — the digest sink.
+    5. ``gate`` — df-capped LSH near-dup evidence in ``near_dups``
+       (``near_dup_gate``).
+    6. ``compact`` — every ``compact_every`` batches, fold the digest
+       store (and, with the gate, the LSH stores) onto the
+       ``COMPACTED_PBATCH`` sentinel partition.
 
-        new docs        → ``{out_root}/clean``  (payload rows)
-        duplicate docs  → ``{out_root}/dups``   (doc_id + status evidence)
-        new digests     → ``{out_root}/digests`` (16 bytes/doc history)
+    Contracts, and the stage that holds each:
 
-    Unlike ``streaming_exact_dedup`` (whose watermark bounds the dedup
-    horizon), the digest store remembers forever: a doc that arrived
-    last month still blocks today's copy. State lives in the lake, not
-    the state store — the history side is a parquet digest table a
-    compaction job can bucket by ``content_hash``
-    (operators/scale.py::write_bucketed) so the per-batch classify join
-    runs shuffle-free on the history side at 100 TB.
-
-    Replay idempotency: every sink (including the digest store) writes
-    under a ``pbatch=<run_id>-<batch_id>`` dynamic-overwrite partition,
-    where ``run_id`` is minted once per checkpoint DIRECTORY and
-    persisted inside it (``_incarnation_id`` — spelling-independent, so
-    ``/ckpt`` vs ``/ckpt/`` vs a symlink resolve to one incarnation)
-    — so a batch redelivered after a mid-batch crash (same checkpoint,
-    same batch_id) lands on its own partition and re-derives identical
-    verdicts, because the classify step reads the store EXCLUDING the
-    current partition (pinned by
-    test_streaming_history_dedup.py::test_replay_idempotent_same_checkpoint).
-    A NEW job incarnation (fresh checkpoint) gets a fresh run_id: its
-    batch 0 can never collide with — and silently dynamic-overwrite —
-    a prior incarnation's ``pbatch=0`` history, and its documents
-    classify against everything every earlier incarnation ingested
-    (the "remembers forever" contract; re-submitting the same corpus
-    under a new checkpoint therefore routes it to ``dups``, not to a
-    second copy in ``clean``).
-
-    The digest-store read fails LOUDLY on storage errors: only the
-    does-not-exist-yet cold start yields an empty history (an explicit
-    filesystem existence probe, not a broad except — a transient read
-    fault must fail the batch and let the checkpoint retry it, never
-    classify known duplicates as new).
-
-    ``near_dup_gate=True`` additionally routes every digest-``new``
-    document through the df-CAPPED persisted LSH gate (the round-6
-    skew defense composed into ingest, where boilerplate actually
-    arrives): beside the digest store the job maintains
-
-        ``{out_root}/lsh/bands`` — capped band rows of ingested docs
-        ``{out_root}/lsh/df``    — per-batch shingle df deltas (the
-                                   accumulated document-frequency
-                                   relation the cap is computed from)
-        ``{out_root}/near_dups`` — (doc_id, doc_hist) candidate
-                                   evidence per batch
-
-    Each batch's band rows are capped against the ACCUMULATED df
-    (stored deltas + the batch's own contribution — so a shingle that
-    crosses the cap mid-stream stops banding from that batch on, and a
-    batch-internal boilerplate flood caps itself). Candidates are
-    evidence, not removal: near-dup docs still land in ``clean`` and
-    the index, and downstream curation cuts on the evidence — the
-    same policy split as the batch pair queries. All three new sinks
-    use the identical ``pbatch`` dynamic-overwrite + excluded-on-read
-    discipline as the digest store, so a redelivered batch re-derives
-    identical bands, deltas, and candidates.
-
-    ``compact_every=N`` folds the job's append-only stores every N
-    batches onto the ``COMPACTED_PBATCH`` sentinel partition: the
-    digest store to one consolidated file set
-    (``compact_history_digest_store`` — the classify join then lists
-    O(1) file sets instead of one per batch ever ingested) and, with
-    the gate on, the two LSH stores
-    (``compact_dedup_lsh_index_capped``: df to one row per shingle,
-    bands to one file set) — EXCEPT the current batch's partition,
-    which stays un-folded so a batch redelivered after a
-    post-compaction crash still excludes exactly its own prior
-    contribution (replay stays idempotent across the compaction
-    boundary). Compaction is crash-safe via the shared rename-swap +
-    ``_repair_swap_dir`` sweep, which the store reads below run before
-    every existence probe.
-
-    ``bloom_prefilter=True`` keeps a partitioned Bloom filter
-    (``{out_root}/bloom``, one ~10-bits/key bit-array row per hash
-    partition — operators/dedup.py::build_bloom_membership) beside the
-    digest store and probes each batch against it BEFORE the exact
-    classify: digests the filter rules out are definitively new, so a
-    batch with zero "maybe" rows never reads the digest store at all —
-    the common all-new crawl batch skips the scan of the entire
-    history. "Maybe" rows route through the IDENTICAL exact join
-    (false positives cost a lookup, never a wrong status), and both
-    slices share the same classification core
-    (``incremental_dedup_digests`` — a digest's copies always land in
-    one slice, so the first-copy election is unchanged). The invariant
-    that makes skipping sound — the filter is a SUPERSET of the digest
-    store — is held by WRITE ORDER: the filter is OR-updated (or
-    rebuilt with headroom when a partition's slack is spent) and
-    atomically swapped BEFORE the batch's digest partition lands, so a
-    crash between the two writes only ever leaves extra bits (false
-    positives), never missing ones (false negatives). Replays re-OR
-    the same bits idempotently. A takedown that REMOVES digests
-    (block_reingest=False) leaves stale filter bits — again FP-only:
-    the exact join decides, so purged content re-ingests as new.
-
-    ``respect_tombstones=True`` makes erasure win over checkpoint
-    redelivery: every batch anti-joins the lake's ``_tombstones`` log
-    (written by streaming/retention.py::takedown_documents) before its
-    doc-keyed sinks, so a batch replayed AFTER a takedown cannot
-    resurrect a purged document's payload, band rows, or evidence —
-    the digest sink stays UNfiltered so the purged content remains
-    blocked from re-ingestion (the block_reingest=True posture). The
-    cost is one broadcast anti-join per batch against a
-    takedown-request-sized id set. With the flag off, the documented
-    quiescence contract applies instead: re-run
-    ``reapply_tombstones`` after recovery.
+    - Replay idempotency by ``pbatch`` (every sink, every history
+      read, ``compact``): each sink overwrites its batch's
+      ``pbatch=<run_id>-<batch_id>`` partition and every history read
+      excludes it, so a batch redelivered from the same checkpoint
+      re-derives identical rows; ``compact`` leaves that partition
+      un-folded. ``run_id`` is minted once per checkpoint directory
+      (``_incarnation_id``), so a new checkpoint never overwrites an
+      earlier incarnation's history.
+    - Superset by write order (``bloom`` before ``digests``): the
+      filter swap lands before the digest partition, so a crash
+      between them leaves extra bits, never missing ones. The
+      ``_covered.json`` watermark makes ``classify`` rebuild a filter
+      that misses partitions (batches ingested with the flag off, or a
+      fold of them).
+    - Erasure over redelivery (``route``): tombstoned ids reach neither
+      the doc-keyed sinks nor the gate; the digest sink stays
+      unfiltered, so purged content stays blocked from re-ingestion.
+      With the flag off, re-run ``reapply_tombstones`` after recovery.
+    - Loud failure on a storage error (``classify`` and ``gate``
+      reads): only a store that does not exist yet reads as empty
+      history; any other read error fails the batch, and the
+      checkpoint retries it.
     """
-    from flink_realtime_data_warehouse_spark.operators.dedup import (
-        _BLOOM_SCHEMA,
-        BLOOM_BITS_PER_KEY,
-        BLOOM_PARTS,
-        NGRAM_DF_CAP,
-        _bands_from_shingles,
-        _capped_batch_shingles,
-        _exploded_shingle_hashes,
-        build_bloom_membership,
-        compact_dedup_lsh_index_capped,
-        incremental_dedup_digests,
-        or_bloom_membership,
-        probe_bloom_membership,
+    ingest = functools.partial(
+        _ingest_batch,
+        spark=spark,
+        out_root=out_root,
+        run_id=_incarnation_id(checkpoint),
+        near_dup_gate=near_dup_gate,
+        compact_every=compact_every,
+        respect_tombstones=respect_tombstones,
+        bloom_prefilter=bloom_prefilter,
+        redact_pii=redact_pii,
     )
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
-    digests_path = f"{out_root}/digests"
-    lsh_df_path = f"{out_root}/lsh/df"
-    lsh_bands_path = f"{out_root}/lsh/bands"
-    bloom_path = f"{out_root}/bloom"
-    #: rebuild-with-slack factor: OR-updates consume the headroom, then
-    #: one rebuild re-sizes — amortized O(1) rebuild work per key
-    bloom_headroom = 4
-    run_id = _incarnation_id(checkpoint)
-
-    def _store_exists(p: str) -> bool:
-        # "exists" is backend-defined: a directory for the parquet
-        # store, a committed manifest for the log store (the dir alone
-        # can predate the first commit by one crash)
-        return FORMAT.exists(p)
-
-    def _digest_store_exists() -> bool:
-        # roll back a digest compaction crashed mid-swap BEFORE the
-        # existence probe — a store renamed away between the two swap
-        # renames must restore, never read as an empty cold start
-        # (an empty history would classify known duplicates as new)
-        FORMAT.repair(out_root, digests_path)
-        return _store_exists(digests_path)
-
-    def _digest_parts() -> set[str]:
-        """pbatch partition names currently in the digest store
-        (including the ``__compacted__`` fold sentinel — a fold of
-        uncovered partitions must read as uncovered)."""
-        return set(FORMAT.list_partitions(digests_path, "pbatch"))
-
-    def _bloom_covered() -> set[str]:
-        """Digest partitions the current filter provably covers — the
-        watermark written atomically with every filter swap. A legacy
-        store without the sidecar reports empty coverage, forcing one
-        rebuild (the safe migration)."""
-        text = FORMAT.read_sidecar(bloom_path, "_covered.json")
-        if text is None:
-            return set()
-        try:
-            return set(json.loads(text))
-        except ValueError:
-            return set()
-
-    def _swap_write_bloom(rows: DataFrame, covered: set[str]) -> None:
-        """Atomically replace the bloom store (rename-swap; the
-        ``_repair_swap_dir`` sweep every reader runs rolls back a
-        mid-swap crash). ``covered`` — the digest partitions this
-        filter accounts for — lands as a ``_covered.json`` sidecar
-        INSIDE the swapped dir (Spark ignores ``_``-files), so filter
-        bits and watermark can never be observed out of sync."""
-        tmp = FORMAT.stage_path(bloom_path)
-        rows.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_covered.json"), "w") as f:
-            json.dump(sorted(covered), f)
-        FORMAT.commit_swap(bloom_path, tmp)
-
-    def _update_bloom(new_digests: DataFrame, pbatch: str) -> None:
-        """Fold the batch's new digests into the filter BEFORE the
-        digest partition lands (the superset-by-write-order invariant).
-        OR-update while every touched partition has sizing slack;
-        rebuild from the digest store + this batch with fresh headroom
-        the moment one would overflow (amortized O(1) work per key —
-        partitions are md5-balanced, so they fill together)."""
-        new_digests = new_digests.filter(
-            F.col("content_hash").isNotNull()
-        ).distinct()
-        new_counts = {
-            r["pkey"]: r["c"]
-            for r in new_digests.groupBy(
-                F.pmod(F.xxhash64("content_hash"), F.lit(BLOOM_PARTS))
-                .cast("int")
-                .alias("pkey")
-            )
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        if not new_counts and _store_exists(bloom_path):
-            return  # nothing new; the store is already current
-        meta = {}
-        if _store_exists(bloom_path):
-            meta = {
-                r["pkey"]: (int(r["n_keys"]), int(r["m_bits"]))
-                for r in FORMAT.read(spark, bloom_path, _BLOOM_SCHEMA)
-                .select("pkey", "n_keys", "m_bits")
-                .collect()
-            }
-        overflow = not meta
-        for pk, c in new_counts.items():
-            n0, m = meta.get(pk, (0, 64))
-            if (n0 + c) * BLOOM_BITS_PER_KEY > m:
-                overflow = True
-        if overflow:
-            hist = (
-                FORMAT.read(
-                    spark, digests_path, "content_hash string, pbatch string"
-                )
-                .filter(~F.col("pbatch").eqNullSafe(pbatch))
-                .select("content_hash")
-                if _digest_store_exists()
-                else spark.createDataFrame([], "content_hash string")
-            )
-            rows = build_bloom_membership(
-                hist.unionByName(new_digests).distinct(),
-                headroom=bloom_headroom,
-            )
-        else:
-            rows = or_bloom_membership(
-                FORMAT.read(spark, bloom_path, _BLOOM_SCHEMA),
-                new_digests,
-            )
-        # the in-flight pbatch joins the watermark NOW: its digest
-        # partition lands after this swap (superset-by-write-order),
-        # and the next batch must not read it as uncovered
-        _swap_write_bloom(rows, covered=_digest_parts() | {pbatch})
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        pbatch = f"{run_id}-{batch_id}"
-        batch = batch.dropDuplicates(["doc_id"])
-        # explicit schemas on every store read: a zero-row batch's
-        # dynamic-overwrite write creates the store directory with no
-        # data files, and schema inference on it would fail the NEXT
-        # batch (found by the empty-corpus tier driving the gate
-        # parity row end-to-end)
-        def _history() -> DataFrame:
-            if _digest_store_exists():
-                return FORMAT.read(
-                    spark, digests_path, "content_hash string, pbatch string"
-                ).filter(
-                    # null-safe: rows from an out-of-band (pre-sentinel)
-                    # compaction read pbatch as NULL and must stay history
-                    ~F.col("pbatch").eqNullSafe(pbatch)
-                )
-            return spark.createDataFrame(
-                [], "content_hash string, pbatch string"
-            )
-
-        from pyspark import StorageLevel
-
-        inc = batch.select("doc_id", F.md5("text").alias("content_hash"))
-        no_history = spark.createDataFrame([], "content_hash string")
-        flagged = None
-        if bloom_prefilter:
-            FORMAT.repair(out_root, bloom_path)
-            if _digest_store_exists() and (
-                not _store_exists(bloom_path)
-                # stale filter: the digest store carries partitions the
-                # filter's watermark never covered — batches ingested
-                # while the flag was off (or a fold of such batches, or
-                # a pre-watermark legacy store). Probing a SUBSET
-                # filter would yield false negatives (already-ingested
-                # docs classified new), so rebuild first.
-                or _digest_parts() - _bloom_covered()
-            ):
-                # build from the full digest store (including any
-                # crashed attempt's partition — a superset only ever
-                # costs false positives)
-                _swap_write_bloom(
-                    build_bloom_membership(
-                        FORMAT.read(
-                            spark,
-                            digests_path,
-                            "content_hash string, pbatch string",
-                        ).select("content_hash"),
-                        headroom=bloom_headroom,
-                    ),
-                    covered=_digest_parts(),
-                )
-            if _store_exists(bloom_path):
-                blooms = FORMAT.read(spark, bloom_path, _BLOOM_SCHEMA)
-                flagged = probe_bloom_membership(inc, blooms).persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                maybe = flagged.filter("maybe_dup").select(
-                    "doc_id", "content_hash"
-                )
-                clear = flagged.filter(~F.col("maybe_dup")).select(
-                    "doc_id", "content_hash"
-                )
-                if maybe.limit(1).count():
-                    statuses = incremental_dedup_digests(
-                        maybe, _history()
-                    ).unionByName(
-                        incremental_dedup_digests(clear, no_history)
-                    )
-                else:
-                    # the all-new fast path: the digest store — the
-                    # whole ingest history — is never even scanned
-                    statuses = incremental_dedup_digests(flagged, no_history)
-            else:
-                # cold lake: no filter and no history to consult
-                statuses = incremental_dedup_digests(inc, no_history)
-        else:
-            statuses = incremental_dedup_digests(inc, _history())
-
-        # four lineages traverse the classified batch (clean, dups,
-        # digests, and the gate's new_docs) — persist it so the digest
-        # store scan + classify join run once per batch, not per sink
-        routed = batch.join(statuses, "doc_id").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-        def _sink(df: DataFrame, path: str) -> None:
-            # r12 opt (guide §6 small files): the per-batch sink
-            # relations read from PERSISTED parents, and AQE does not
-            # re-partition cached plans (canChangeCachedPlanOutputPartitioning
-            # is off by default) — so every sink wrote one file per
-            # cached partition (32/batch/store at the bench width) and
-            # each later batch's store reads paid the per-file open
-            # cost. A REBALANCE hint at the write only (the exchange
-            # sits ABOVE the cache scan, where AQE does apply) sizes
-            # the writer by advisory bytes: one file per tiny batch
-            # delta, more as batches grow — never a constant.
-            FORMAT.overwrite_partitions(
-                df.withColumn("pbatch", F.lit(pbatch)).hint("rebalance"),
-                path,
-                "pbatch",
-            )
-
-        try:
-            is_new = F.col("status") == "new"
-            # erasure-over-redelivery: doc-keyed sinks exclude
-            # tombstoned ids; the digest sink below stays UNfiltered
-            # so purged content remains blocked from re-ingestion
-            doc_rows = routed
-            if respect_tombstones and _store_exists(
-                f"{out_root}/_tombstones"
-            ):
-                tomb = (
-                    FORMAT.read(spark, f"{out_root}/_tombstones", "doc_id bigint")
-                    .distinct()
-                )
-                doc_rows = routed.join(F.broadcast(tomb), "doc_id", "left_anti")
-            clean_rows = doc_rows.filter(is_new).drop("status")
-            if redact_pii:
-                # scrub the stored payload ONLY — every classification
-                # relation above/below (digest, bloom, gate shingles)
-                # reads the original bytes, so dedup semantics are
-                # unchanged by the rewrite. The PRE-redaction digest is
-                # persisted beside the redacted payload: md5 of a
-                # scrubbed text no longer matches the digest store, so
-                # without this column takedown's opt-in unblock policy
-                # (block_reingest=False) could never match a purged
-                # payload back to its digest (ADVICE r9) — the hex
-                # digest itself carries no PII
-                from flink_realtime_data_warehouse_spark.operators.pii import (
-                    redact_text,
-                )
-
-                clean_rows = clean_rows.withColumn(
-                    "text", redact_text(F.col("text"))
-                )
-            else:
-                clean_rows = clean_rows.drop("content_hash")
-            _sink(clean_rows, f"{out_root}/clean")
-            _sink(
-                doc_rows.filter(~is_new).select("doc_id", "content_hash", "status"),
-                f"{out_root}/dups",
-            )
-            if bloom_prefilter:
-                # filter-before-digests write order: a crash between
-                # the two leaves the filter a superset (FPs only)
-                _update_bloom(
-                    routed.filter(is_new).select("content_hash"), pbatch
-                )
-            _sink(
-                routed.filter(is_new).select("content_hash"),
-                digests_path,
-            )
-            if near_dup_gate:
-                # roll back a compaction crashed mid-swap BEFORE the
-                # existence probes: a store renamed away between the
-                # two swap renames must be restored, never treated as
-                # an empty cold start
-                for p in (lsh_df_path, lsh_bands_path):
-                    FORMAT.repair(f"{out_root}/lsh", p)
-                # tombstoned docs contribute no bands/df on a replay
-                # (erasure wins over cap bookkeeping — documented)
-                new_docs = doc_rows.filter(is_new).select("doc_id", "text")
-                # pbatch filters are null-safe so rows from a store
-                # compacted by an out-of-band (pre-sentinel) job —
-                # whose pbatch reads as NULL — survive as history
-                # instead of vanishing under NULL != x
-                stored_df = (
-                    FORMAT.read(
-                        spark, lsh_df_path, "s bigint, df bigint, pbatch string"
-                    ).filter(~F.col("pbatch").eqNullSafe(pbatch))
-                    if _store_exists(lsh_df_path)
-                    else None
-                )
-                # ONE persisted shingle relation feeds all four gate
-                # lineages (df delta, hot set, band append, probe) —
-                # without it the explode+distinct re-runs per lineage.
-                # The fan-out runs the explode wide: a micro-batch is
-                # typically ONE source file = one scan task (fanout.py)
-                from flink_realtime_data_warehouse_spark.fanout import (
-                    fanout,
-                )
-
-                sh = (
-                    _exploded_shingle_hashes(fanout(new_docs, "doc_id"))
-                    .distinct()
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                sh_capped, delta = _capped_batch_shingles(
-                    new_docs, stored_df, NGRAM_DF_CAP, sh=sh
-                )
-                # r12 opt: persist BANDS, not the capped shingles — the
-                # probe join and the band sink both consume bands, and
-                # persisting the relation one step earlier made each of
-                # them re-run the minhash aggregation (the heaviest
-                # per-batch stage: 128 min-exprs over every shingle,
-                # measured ~2 s of the gated batch) from the cache.
-                # sh_capped has exactly one consumer now (this
-                # materialization), so it needs no persist of its own.
-                bands = _bands_from_shingles(sh_capped).persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                try:
-                    if _store_exists(lsh_bands_path):
-                        hist_bands = FORMAT.read(
-                            spark,
-                            lsh_bands_path,
-                            "doc_id bigint, band int, key string, pbatch string",
-                        ).filter(~F.col("pbatch").eqNullSafe(pbatch))
-                        near = (
-                            bands.alias("n")
-                            .join(
-                                hist_bands.alias("h"),
-                                (F.col("n.band") == F.col("h.band"))
-                                & (F.col("n.key") == F.col("h.key")),
-                            )
-                            .select(
-                                F.col("n.doc_id").alias("doc_id"),
-                                F.col("h.doc_id").alias("doc_hist"),
-                            )
-                            .distinct()
-                        )
-                    else:
-                        near = spark.createDataFrame(
-                            [], "doc_id bigint, doc_hist bigint"
-                        )
-                    _sink(near, f"{out_root}/near_dups")
-                    _sink(bands, lsh_bands_path)
-                    _sink(delta, lsh_df_path)
-                finally:
-                    bands.unpersist()
-                    sh.unpersist()
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                compact_history_digest_store(
-                    spark, out_root, exclude_pbatch=pbatch
-                )
-                if near_dup_gate:
-                    compact_dedup_lsh_index_capped(
-                        spark, f"{out_root}/lsh", exclude_pbatch=pbatch
-                    )
-        finally:
-            routed.unpersist()
-            if flagged is not None:
-                flagged.unpersist()
-
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
+    return _start(
+        doc_stream.writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", checkpoint),
+        available_now,
     )

@@ -2,6 +2,8 @@
 
 - statuses byte-identical with the flag on/off (the filter is an
   access-path optimization, never a semantics fork);
+- the filter stays a superset of the digest store after every batch,
+  across a compaction with the near-dup gate on;
 - the all-new fast path PROVABLY never reads the digest store (the
   store is corrupted on disk; flag-on succeeds, flag-off fails);
 - the superset-by-write-order invariant survives a crash between the
@@ -16,7 +18,7 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401 (parity reads)
+from pyspark.sql import functions as F
 
 from flink_realtime_data_warehouse_spark.streaming.jobs import (
     start_history_dedup_ingest,
@@ -44,7 +46,7 @@ _B1 = [
 _B2 = [{"doc_id": 30 + i, "text": f"all new closing batch {i}"} for i in range(4)]
 
 
-def _run(spark, root: str, flag: bool) -> None:
+def _run(spark, root: str, flag: bool, **flags) -> None:
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
@@ -56,6 +58,7 @@ def _run(spark, root: str, flag: bool) -> None:
         os.path.join(root, "out"),
         os.path.join(root, "ckpt"),
         bloom_prefilter=flag,
+        **flags,
     )
     q.awaitTermination()
 
@@ -73,6 +76,27 @@ def _statuses(spark, root: str) -> dict[int, str]:
         }
     )
     return got
+
+
+def _assert_bloom_superset(spark, root: str) -> None:
+    """Every digest in the store probes ``maybe_dup`` — the filter is a
+    superset of the digest store (NULL digests are never stored in it)."""
+    from flink_realtime_data_warehouse_spark.operators.dedup import (
+        probe_bloom_membership,
+    )
+
+    out = os.path.join(root, "out")
+    digests = (
+        spark.read.schema("content_hash string, pbatch string")
+        .parquet(os.path.join(out, "digests"))
+        .filter(F.col("content_hash").isNotNull())
+        .select(F.lit(0).cast("long").alias("doc_id"), "content_hash")
+    )
+    flagged = probe_bloom_membership(
+        digests, spark.read.parquet(os.path.join(out, "bloom"))
+    )
+    assert digests.count() > 0
+    assert flagged.filter(~F.col("maybe_dup")).count() == 0
 
 
 def _seed(root: str) -> None:
@@ -102,6 +126,16 @@ def test_statuses_identical_with_and_without_prefilter(spark, tmp_path):
         for root in (a, b)
     )
     assert da == db
+    # composed with the gate and a compaction after batch 1: the filter
+    # stays a superset of the digest store after every batch
+    c = str(tmp_path / "composed")
+    for i, rows in enumerate((_B0, _B1, _B2)):
+        mtime = 1_000_000_000.0 + 100 * i
+        _write_batch(os.path.join(c, "src"), f"{i}.jsonl", rows, mtime)
+        _run(spark, c, True, near_dup_gate=True, compact_every=2)
+        _assert_bloom_superset(spark, c)
+    assert "pbatch=__compacted__" in os.listdir(os.path.join(c, "out", "digests"))
+    assert _statuses(spark, c) == _statuses(spark, a)
 
 
 def test_all_new_batch_never_reads_digest_store(spark, tmp_path):

@@ -4,6 +4,8 @@ across micro-batches AND across job restarts; replays are idempotent."""
 import json
 import os
 
+import pytest
+
 from flink_realtime_data_warehouse_spark.streaming.jobs import (
     start_history_dedup_ingest,
 )
@@ -199,3 +201,89 @@ def test_incarnation_id_spelling_independent(spark, tmp_path):
     # one digest row in ONE pbatch partition — no duplicate partition
     assert digests.select("pbatch").distinct().count() == 1
     assert digests.count() == 1
+
+
+def test_processing_time_trigger_starts_and_drains(spark, tmp_path):
+    """``available_now=False`` runs on the default processing-time
+    trigger: the query starts, drains what is there, and stops."""
+    src = str(tmp_path / "docs")
+    os.makedirs(src, exist_ok=True)
+    _write_batch(src, "b1.jsonl", [
+        {"doc_id": 1, "text": "kept running"},
+        {"doc_id": 2, "text": "kept running"},
+    ])
+    stream = spark.readStream.schema("doc_id bigint, text string").json(src)
+    q = start_history_dedup_ingest(
+        spark,
+        stream,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        available_now=False,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    clean = spark.read.parquet(str(tmp_path / "out" / "clean"))
+    assert [r.doc_id for r in clean.collect()] == [1]
+
+
+_GATE_BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+
+#: three batches with in-batch and cross-batch exact dups and near-dups,
+#: so the gate's later batches probe a band history that already exists
+_READ_ONCE_BATCHES = [
+    [
+        {"doc_id": 1, "text": _GATE_BASE},
+        {"doc_id": 2, "text": "second wholly unrelated document body"},
+        {"doc_id": 3, "text": _GATE_BASE},
+    ],
+    [
+        {"doc_id": 4, "text": _GATE_BASE + " lambda"},
+        {"doc_id": 5, "text": "second wholly unrelated document body"},
+        {"doc_id": 6, "text": "fresh words arrive in batch one"},
+        {"doc_id": 7, "text": None},
+    ],
+    [
+        {"doc_id": 8, "text": _GATE_BASE + " mu"},
+        {"doc_id": 9, "text": "fresh words arrive in batch one"},
+        {"doc_id": 10, "text": "closing batch with novel content only"},
+    ],
+]
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [
+        {},
+        {"near_dup_gate": True},
+        {"bloom_prefilter": True},
+        {"near_dup_gate": True, "bloom_prefilter": True, "compact_every": 2},
+    ],
+    ids=["plain", "gate", "bloom", "gate_bloom_compact"],
+)
+def test_each_micro_batch_reads_its_source_once(spark, tmp_path, flags):
+    """Every stage derives from one persisted read of the micro-batch,
+    so the source's ``numInputRows`` is the row count of its file, not
+    a multiple of it."""
+    src = str(tmp_path / "docs")
+    os.makedirs(src, exist_ok=True)
+    for i, rows in enumerate(_READ_ONCE_BATCHES):
+        _write_batch(src, f"b{i}.jsonl", rows)
+        mtime = 1_000_000_000.0 + i  # file-source batches follow mtime order
+        os.utime(os.path.join(src, f"b{i}.jsonl"), (mtime, mtime))
+    stream = (
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
+    )
+    q = start_history_dedup_ingest(
+        spark, stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), **flags
+    )
+    q.awaitTermination(300)
+    read = {
+        p.batchId: p.numInputRows
+        for p in q.recentProgress
+        if "addBatch" in (p.durationMs or {})
+    }
+    assert read == {i: len(rows) for i, rows in enumerate(_READ_ONCE_BATCHES)}

@@ -148,6 +148,16 @@ def main() -> int:
         f"last run: wall={walls[-1]:.3f}s  in-job={job_sum:.3f}s"
         f"  driver-gaps={gap_sum:.3f}s"
     )
+    # per-phase totals: jobs that share a description (e.g. the history
+    # ingest's ``ingest:<stage> <pbatch>``) summed
+    totals: dict[str, list[float]] = {}
+    for _jid, j in last:
+        t = totals.setdefault(" ".join(j["desc"].split()), [0, 0.0])
+        t[0] += 1
+        t[1] += j["end"] - j["start"]
+    print("last run by description:")
+    for desc, (n, secs) in sorted(totals.items(), key=lambda kv: -kv[1][1]):
+        print(f"  {secs * 1000:9.1f} ms  {n:4d} jobs  {desc}")
     import shutil
 
     shutil.rmtree(evdir, ignore_errors=True)
