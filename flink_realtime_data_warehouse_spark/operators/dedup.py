@@ -1837,9 +1837,14 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only that partition's digests and NEVER collected to the driver (a
 # 10¹¹-doc history at 10 bits/key is ~125 GB of filter — fatal as one
 # driver-side object, trivial as BLOOM_PARTS bounded rows co-partitioned
-# with the probe's shuffle). Probing cogroups the incoming batch with
-# its matching filter row: ONE shuffle of the batch on pkey, bit tests
-# vectorized in NumPy.
+# with the probe's shuffle).
+#
+# One kernel (_make_bloom_kernel) serves every caller. Its ``fold`` ORs
+# a pkey's digests into that pkey's filter row, building the row first
+# when there is none: a build is a fold into nothing (groupBy), an
+# OR-update a fold into the stored rows (cogroup). Probing cogroups the
+# incoming batch with its matching filter row — ONE shuffle of the batch
+# on pkey — and runs the kernel's bit test vectorized in NumPy.
 
 BLOOM_BITS_PER_KEY = 10  #: m/n sizing → ~1.2% FPR at k=4
 BLOOM_HASHES = 4  #: double-hashing h1 + i*h2, i < k
@@ -1849,134 +1854,122 @@ BLOOM_FPR_BOUND = 0.05  #: verdict gate, margin over the theoretical rate
 _BLOOM_SCHEMA = "pkey int, n_keys long, m_bits long, bloom binary"
 
 
-def _bloom_hash_pair(hex_digests) -> "tuple":
-    """(h1, h2) uint64 arrays from md5 hex digests — h2 forced odd so
-    the double-hash probe sequence never degenerates.
+def _make_bloom_kernel(n_hashes: int):
+    """Build the Bloom kernel as standalone closures ``(fold, member)``.
 
-    NOTE: the Arrow kernels below INLINE this derivation instead of
-    calling it — cloudpickle serializes a module-level function by
-    reference, and the driver contract's executors cannot import this
-    package (the round-1 worker-closure bug class); kernels must stay
-    self-contained. This copy exists for tests and direct callers."""
-    import numpy as np
+    They reference nothing in this module, so cloudpickle ships them BY
+    VALUE to executors — the worker Python processes of a
+    driver-created session cannot import this package.
+    """
 
-    h1 = np.fromiter(
-        (int(h[:15], 16) for h in hex_digests), dtype=np.uint64
-    )
-    h2 = np.fromiter(
-        (int(h[15:30], 16) | 1 for h in hex_digests), dtype=np.uint64
-    )
-    return h1, h2
-
-
-def build_bloom_membership(
-    history_digests: DataFrame, n_parts: int = BLOOM_PARTS, headroom: int = 1
-) -> DataFrame:
-    """Build the partitioned Bloom filter from history ``content_hash``
-    digests. Returns one (pkey, n_keys, m_bits, bloom) row per hash
-    partition; each bit array is sized to the NEXT power of two over
-    ``n_keys * BLOOM_BITS_PER_KEY * headroom`` so the per-partition FPR
-    holds regardless of how history mass splits across pkeys.
-    ``headroom > 1`` over-sizes for stores that keep growing in place
-    (the streaming ingest OR-updates until the slack is consumed, then
-    rebuilds with fresh headroom — amortized O(1) rebuild work/key)."""
-    import math
-
-    import pandas as pd
-
-    sizing = BLOOM_BITS_PER_KEY * max(1, headroom)
-
-    def _build(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def probe_bits(hexes, m):
+        # the md5 hex digest's two 60-bit halves seed double hashing,
+        # h1 + i*h2 mod m; h2 is odd so the probe sequence never
+        # degenerates. Returns (byte index, bit mask), each (k, n).
         import numpy as np
 
-        hexes = pdf["content_hash"].dropna().unique()
+        h1 = np.fromiter((int(h[:15], 16) for h in hexes), dtype=np.uint64)
+        h2 = np.fromiter((int(h[15:30], 16) | 1 for h in hexes), dtype=np.uint64)
+        pos = (h1 + np.arange(n_hashes, dtype=np.uint64)[:, None] * h2) % np.uint64(m)
+        return (
+            (pos >> np.uint64(3)).astype(np.int64),
+            (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8),
+        )
+
+    def fold(digests, row, sizing):
+        """The one filter row of a pkey after ORing the unique non-null
+        ``content_hash`` values of ``digests`` into ``row`` (a one-row
+        frame, or None when the pkey has no filter row yet: the row is
+        then built sized to the next power of two over ``n * sizing``
+        bits, at least 64)."""
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        hexes = digests["content_hash"].dropna().unique()
         n = len(hexes)
-        m = 64 if n == 0 else max(64, 1 << math.ceil(math.log2(n * sizing)))
-        bits = np.zeros(m // 8, dtype=np.uint8)
+        if row is None:
+            pkey, n0 = digests["pkey"].iloc[0], 0
+            m = max(64, 1 << math.ceil(math.log2(n * sizing)))
+            bits = np.zeros(m // 8, dtype=np.uint8)
+        else:
+            pkey, n0, m = row["pkey"].iloc[0], row["n_keys"].iloc[0], row["m_bits"].iloc[0]
+            bits = np.frombuffer(row["bloom"].iloc[0], dtype=np.uint8).copy()
         if n:
-            h1 = np.fromiter((int(h[:15], 16) for h in hexes), dtype=np.uint64)
-            h2 = np.fromiter((int(h[15:30], 16) | 1 for h in hexes), dtype=np.uint64)
-            for i in range(BLOOM_HASHES):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                np.bitwise_or.at(
-                    bits, (pos >> np.uint64(3)).astype(np.int64),
-                    (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8),
-                )
+            byte, mask = probe_bits(hexes, m)
+            np.bitwise_or.at(bits, byte.ravel(), mask.ravel())
         return pd.DataFrame(
             {
-                "pkey": [int(pdf["pkey"].iloc[0])],
-                "n_keys": [n],
-                "m_bits": [m],
+                "pkey": [int(pkey)],
+                "n_keys": [int(n0) + n],
+                "m_bits": [int(m)],
                 "bloom": [bits.tobytes()],
             }
         )
 
-    keyed = history_digests.filter(F.col("content_hash").isNotNull()).withColumn(
-        "pkey", F.pmod(F.xxhash64("content_hash"), F.lit(n_parts)).cast("int")
+    def member(hexes, row):
+        """Whether each digest's bits are all set in the filter ``row``."""
+        import numpy as np
+
+        bits = np.frombuffer(row["bloom"].iloc[0], dtype=np.uint8)
+        byte, mask = probe_bits(hexes, int(row["m_bits"].iloc[0]))
+        return ((bits[byte] & mask) != 0).all(axis=0)
+
+    return fold, member
+
+
+
+def _bloom_keyed(df: DataFrame) -> DataFrame:
+    return df.withColumn(
+        "pkey", F.pmod(F.xxhash64("content_hash"), F.lit(BLOOM_PARTS)).cast("int")
     )
-    return keyed.groupBy("pkey").applyInPandas(_build, schema=_BLOOM_SCHEMA)
+
+
+def build_bloom_membership(history_digests: DataFrame, headroom: int = 1) -> DataFrame:
+    """Build the partitioned Bloom filter from history ``content_hash``
+    digests: each pkey's digests folded into no row. Returns one (pkey,
+    n_keys, m_bits, bloom) row per hash partition; each bit array is
+    sized to the NEXT power of two over ``n_keys * BLOOM_BITS_PER_KEY *
+    headroom`` so the per-partition FPR holds regardless of how history
+    mass splits across pkeys. ``headroom > 1`` over-sizes for stores
+    that keep growing in place (the streaming ingest OR-updates until a
+    row outgrows its sizing, then rebuilds with fresh headroom —
+    amortized O(1) rebuild work per key)."""
+    sizing = BLOOM_BITS_PER_KEY * max(1, headroom)
+    fold, _ = _make_bloom_kernel(BLOOM_HASHES)
+    return (
+        _bloom_keyed(history_digests.filter(F.col("content_hash").isNotNull()))
+        .groupBy("pkey")
+        .applyInPandas(lambda pdf: fold(pdf, None, sizing), schema=_BLOOM_SCHEMA)
+    )
 
 
 def or_bloom_membership(
-    blooms: DataFrame, new_digests: DataFrame, n_parts: int = BLOOM_PARTS
+    blooms: DataFrame, new_digests: DataFrame, headroom: int = 1
 ) -> DataFrame:
     """OR new digests into an existing partitioned filter (same row
-    schema in and out). Bit-setting is idempotent, so a redelivered
-    batch converges to the same bits; ``n_keys`` may overcount on a
-    replay, which only hastens the next full rebuild (the rebuild
-    recounts exactly — never a correctness issue). Partitions with no
-    new digests pass through untouched; a pkey with new digests but no
-    existing row gets a fresh minimum-size array (the caller's
-    overflow check routes anything larger to a full rebuild)."""
-    import pandas as pd
-
-    def _merge(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        hexes = (
-            left["content_hash"].dropna().unique() if len(left) else []
-        )
-        if len(right):
-            pk = int(right["pkey"].iloc[0])
-            n0 = int(right["n_keys"].iloc[0])
-            m = int(right["m_bits"].iloc[0])
-            bits = np.frombuffer(right["bloom"].iloc[0], dtype=np.uint8).copy()
-        else:
-            pk, n0, m = int(left["pkey"].iloc[0]), 0, 64
-            bits = np.zeros(8, dtype=np.uint8)
-        if len(hexes):
-            h1 = np.fromiter((int(h[:15], 16) for h in hexes), dtype=np.uint64)
-            h2 = np.fromiter(
-                (int(h[15:30], 16) | 1 for h in hexes), dtype=np.uint64
-            )
-            for i in range(BLOOM_HASHES):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                np.bitwise_or.at(
-                    bits, (pos >> np.uint64(3)).astype(np.int64),
-                    (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8),
-                )
-        return pd.DataFrame(
-            {
-                "pkey": [pk],
-                "n_keys": [n0 + len(hexes)],
-                "m_bits": [m],
-                "bloom": [bits.tobytes()],
-            }
-        )
-
-    keyed = new_digests.filter(F.col("content_hash").isNotNull()).withColumn(
-        "pkey", F.pmod(F.xxhash64("content_hash"), F.lit(n_parts)).cast("int")
-    )
+    schema in and out): each pkey's new digests folded into its stored
+    row, a pkey without one getting a row built as in
+    ``build_bloom_membership``. Rows with no new digests pass through.
+    Bit-setting is idempotent, so a redelivered batch converges to the
+    same bits; ``n_keys`` may overcount on a replay, which only hastens
+    the next full rebuild (the rebuild recounts exactly — never a
+    correctness issue)."""
+    sizing = BLOOM_BITS_PER_KEY * max(1, headroom)
+    fold, _ = _make_bloom_kernel(BLOOM_HASHES)
     return (
-        keyed.groupBy("pkey")
+        _bloom_keyed(new_digests.filter(F.col("content_hash").isNotNull()))
+        .groupBy("pkey")
         .cogroup(blooms.groupBy("pkey"))
-        .applyInPandas(_merge, schema=_BLOOM_SCHEMA)
+        .applyInPandas(
+            lambda new, row: fold(new, row if len(row) else None, sizing),
+            schema=_BLOOM_SCHEMA,
+        )
     )
 
 
-def probe_bloom_membership(
-    incoming: DataFrame, blooms: DataFrame, n_parts: int = BLOOM_PARTS
-) -> DataFrame:
+def probe_bloom_membership(incoming: DataFrame, blooms: DataFrame) -> DataFrame:
     """Probe (doc_id, content_hash) rows against the partitioned filter.
 
     Emits the batch + ``maybe_dup`` — False is definitive ("never
@@ -1984,6 +1977,8 @@ def probe_bloom_membership(
     against the exact digest store. A pkey with no filter row (cold
     partition) and NULL digests both read definitively-new."""
     import pandas as pd
+
+    _, member = _make_bloom_kernel(BLOOM_HASHES)
 
     def _probe(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
@@ -1995,17 +1990,7 @@ def probe_bloom_membership(
         maybe = np.zeros(len(left), dtype=bool)
         ok = left["content_hash"].notna().to_numpy()
         if len(right) and ok.any():
-            m = np.uint64(int(right["m_bits"].iloc[0]))
-            bits = np.frombuffer(right["bloom"].iloc[0], dtype=np.uint8)
-            hexes = left.loc[ok, "content_hash"]
-            h1 = np.fromiter((int(h[:15], 16) for h in hexes), dtype=np.uint64)
-            h2 = np.fromiter((int(h[15:30], 16) | 1 for h in hexes), dtype=np.uint64)
-            hit = np.ones(int(ok.sum()), dtype=bool)
-            for i in range(BLOOM_HASHES):
-                pos = (h1 + np.uint64(i) * h2) % m
-                byte = bits[(pos >> np.uint64(3)).astype(np.int64)]
-                hit &= (byte & (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8)) != 0
-            maybe[ok] = hit
+            maybe[ok] = member(left.loc[ok, "content_hash"], right)
         return pd.DataFrame(
             {
                 "doc_id": left["doc_id"].to_numpy(),
@@ -2014,11 +1999,9 @@ def probe_bloom_membership(
             }
         )
 
-    keyed = incoming.withColumn(
-        "pkey", F.pmod(F.xxhash64("content_hash"), F.lit(n_parts)).cast("int")
-    )
     return (
-        keyed.groupBy("pkey")
+        _bloom_keyed(incoming)
+        .groupBy("pkey")
         .cogroup(blooms.groupBy("pkey"))
         .applyInPandas(_probe, schema="doc_id long, content_hash string, maybe_dup boolean")
     )

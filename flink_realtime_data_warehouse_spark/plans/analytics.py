@@ -29,6 +29,13 @@ def _ntz(lit: str) -> F.Column:
     return F.expr(f"TIMESTAMP_NTZ '{lit}'")
 
 
+def _dec(name: str) -> F.Column:
+    """Money column ``name`` as exact DECIMAL(18,6). Money sums run in
+    decimal on both sides: float sums are summation-order dependent and
+    can flip a rounding boundary against the oracle engine."""
+    return F.col(name).cast("decimal(18,6)")
+
+
 # ---------------------------------------------------------------------------
 # TPC-H-style aggregations and joins
 # ---------------------------------------------------------------------------
@@ -55,18 +62,15 @@ def _ntz(lit: str) -> F.Column:
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: one scan, partial+final hash aggregate on a 2-value key."""
     li = load_table(spark, sf_dir, "lineitem")
-    # money sums run in exact DECIMAL: float sums are summation-order
-    # dependent and can flip a rounding boundary vs the oracle engine
-    dec = lambda name: F.col(name).cast("decimal(18,6)")  # noqa: E731
-    disc_price_dec = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
+    disc_price_dec = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= _ntz("1998-12-01 00:00:00"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(dec("l_extendedprice")), 2).cast("double").alias("sum_base_price"),
+            F.round(F.sum(_dec("l_extendedprice")), 2).cast("double").alias("sum_base_price"),
             F.round(F.sum(disc_price_dec), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(disc_price_dec * (F.lit(1) + dec("l_tax"))), 2).cast("double").alias("sum_charge"),
+            F.round(F.sum(disc_price_dec * (F.lit(1) + _dec("l_tax"))), 2).cast("double").alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
@@ -80,7 +84,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q3_shipping_priority",
     oracle="""
     SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(round(sum(l_extendedprice::DECIMAL(18,6) * (1 - l_discount::DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
            CAST(o_orderdate AS DATE)                         AS orderdate
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
@@ -102,7 +106,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(ords, li.l_orderkey == ords.o_orderkey)
         .join(F.broadcast(cust), ords.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", F.col("o_orderdate").cast("date").alias("orderdate"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(
+            F.round(F.sum(_dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))), 2)
+            .cast("double")
+            .alias("revenue")
+        )
         .select("l_orderkey", "revenue", "orderdate")
         .orderBy(F.desc("revenue"), "orderdate", "l_orderkey")
         .limit(10)
@@ -167,7 +175,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q6_forecast_revenue",
     oracle="""
-    SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
+    SELECT CAST(round(sum(l_extendedprice::DECIMAL(18,6) * l_discount::DECIMAL(18,6)), 2) AS DOUBLE) AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
       AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24
@@ -182,7 +190,11 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < _ntz("1997-01-01 00:00:00"))
             & (F.col("l_discount").between(0.03, 0.07))
             & (F.col("l_quantity") < 24)
-        ).agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
+        ).agg(
+            F.round(F.sum(_dec("l_extendedprice") * _dec("l_discount")), 2)
+            .cast("double")
+            .alias("revenue")
+        )
     )
 
 
@@ -190,7 +202,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_returned_items",
     oracle="""
     SELECT c_custkey, c_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(round(sum(l_extendedprice::DECIMAL(18,6) * (1 - l_discount::DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
            round(c_acctbal, 2) AS acctbal, n_name
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
@@ -216,7 +228,11 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(
+            F.round(F.sum(_dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))), 2)
+            .cast("double")
+            .alias("revenue")
+        )
         .select(
             "c_custkey",
             "c_name",

@@ -976,34 +976,26 @@ def _route_and_sink(
 
 def _update_bloom(b: _IngestBatch, new_digests: DataFrame) -> None:
     """Stage ``bloom``: fold the batch's new digests into the filter
-    BEFORE its digest partition lands. OR-update while every touched
-    filter partition has sizing slack; rebuild with fresh headroom the
-    moment one would overflow."""
+    BEFORE its digest partition lands. The folded rows are swapped in
+    unless one has outgrown its sizing (more than ``m_bits /
+    BLOOM_BITS_PER_KEY`` keys); then the filter is rebuilt with fresh
+    headroom."""
     from flink_realtime_data_warehouse_spark.operators import dedup
 
     b.stage("bloom")
     bloom = b.path("bloom")
-    new_digests = new_digests.filter(F.col("content_hash").isNotNull()).distinct()
     if FORMAT.exists(bloom):
-        pkey = F.pmod(F.xxhash64("content_hash"), F.lit(dedup.BLOOM_PARTS)).cast("int")
-        counts = dict(new_digests.groupBy(pkey).count().collect())
-        if not counts:
-            return  # nothing new; the filter is already current
-        # keys each filter partition can still take at its sizing; a
-        # pkey without a row gets the 64-bit minimum
-        slack = {
-            r.pkey: r.m_bits // dedup.BLOOM_BITS_PER_KEY - r.n_keys
-            for r in FORMAT.read(b.spark, bloom, dedup._BLOOM_SCHEMA)
-            .select("pkey", "n_keys", "m_bits")
-            .collect()
-        }
-        fresh_slack = 64 // dedup.BLOOM_BITS_PER_KEY
-        if slack and all(c <= slack.get(pk, fresh_slack) for pk, c in counts.items()):
-            rows = dedup.or_bloom_membership(
-                FORMAT.read(b.spark, bloom, dedup._BLOOM_SCHEMA), new_digests
+        folded = b.persist(
+            dedup.or_bloom_membership(
+                FORMAT.read(b.spark, bloom, dedup._BLOOM_SCHEMA),
+                new_digests,
+                headroom=_BLOOM_HEADROOM,
             )
+        )
+        overflow = F.col("n_keys") * dedup.BLOOM_BITS_PER_KEY > F.col("m_bits")
+        if not folded.filter(overflow).select("pkey").collect():
             digest_parts = FORMAT.list_partitions(b.path("digests"), "pbatch")
-            _swap_write_bloom(b, rows, set(digest_parts) | {b.pbatch})
+            _swap_write_bloom(b, folded, set(digest_parts) | {b.pbatch})
             return
     _rebuild_bloom(b, new_digests)
 

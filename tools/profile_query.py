@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import tempfile
 import time
@@ -158,6 +159,19 @@ def main() -> int:
     print("last run by description:")
     for desc, (n, secs) in sorted(totals.items(), key=lambda kv: -kv[1][1]):
         print(f"  {secs * 1000:9.1f} ms  {n:4d} jobs  {desc}")
+    # per-stage totals: the same descriptions with the ``<pbatch>``
+    # suffix of ``<layer>:<stage> <pbatch>`` dropped, summed over batches
+    stages: dict[str, list[float]] = {}
+    for desc, (n, secs) in totals.items():
+        m = re.fullmatch(r"(\S+:\S+) \S+", desc)
+        if m:
+            t = stages.setdefault(m.group(1), [0, 0.0])
+            t[0] += n
+            t[1] += secs
+    if stages:
+        print("last run by stage (all batches):")
+        for stage, (n, secs) in sorted(stages.items(), key=lambda kv: -kv[1][1]):
+            print(f"  {secs * 1000:9.1f} ms  {n:4d} jobs  {stage}")
     import shutil
 
     shutil.rmtree(evdir, ignore_errors=True)
