@@ -1448,11 +1448,12 @@ def dedup_incremental_lsh_dfcap_compacted(
     twin is oracle-covered by ``histdedup_gate_streaming_parity`` plus
     the cadenced-compaction parity tests.)"""
     import os
-    import tempfile
+
+    from flink_realtime_data_warehouse_spark.sources.ingest import _session_tmpdir
 
     docs = load_table(spark, sf_dir, "documents")
     is_inc = F.pmod("doc_id", F.lit(INCR_HISTORY_MOD)) == INCR_HISTORY_MOD - 1
-    idx = tempfile.mkdtemp(prefix="frdw_dfcap_compact_")
+    idx = _session_tmpdir("dedup_incremental_lsh_dfcap_compacted")
     build_dedup_lsh_index_capped(docs.filter(~is_inc), idx)
     compact_dedup_lsh_index_capped(spark, idx)
     if not any(

@@ -23,9 +23,6 @@ the generalization of the st4 streaming-parity pattern.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -137,6 +134,11 @@ def cep_funnel_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     past each key's horizon, so every trailing partial exits through
     the in-batch timeout path deterministically (sentinel type
     'flush' matches no step, so it adds no emissions of its own)."""
+    # imported here so the registry keeps its module load order
+    from flink_realtime_data_warehouse_spark.plans.streaming_parity import (
+        _run_stream,
+    )
+
     flat = _funnel_events(spark, sf_dir)
     flush = (
         flat.groupBy("user_id")
@@ -151,33 +153,19 @@ def cep_funnel_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_df = flat.unionByName(flush).withColumn(
         "event_time", F.timestamp_micros(F.col("ts_us"))
     )
-
-    root = tempfile.mkdtemp(prefix="frdw_cep_parity_")
-    src = os.path.join(root, "src")
-    sink = os.path.join(root, "sink")
-    ckpt = os.path.join(root, "ckpt")
-    src_df.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .parquet(src)
-        .withWatermark("event_time", "0 seconds")
+    out = _run_stream(
+        spark,
+        "cep_funnel_streaming_parity",
+        src_df,
+        _STREAM_SCHEMA,
+        lambda s: match_sequence(
+            s.withWatermark("event_time", "0 seconds"),
+            steps=FUNNEL_STEPS,
+            within=FUNNEL_WINDOW_US,
+            key_col="user_id",
+            ts_col="ts_us",
+            order_col="event_id",
+            ts_per_ms=1000,  # ts is epoch-µs; GroupState timeouts are ms
+        ),
     )
-    out = match_sequence(
-        stream,
-        steps=FUNNEL_STEPS,
-        within=FUNNEL_WINDOW_US,
-        key_col="user_id",
-        ts_col="ts_us",
-        order_col="event_id",
-        ts_per_ms=1000,  # ts is epoch-µs; GroupState timeouts are ms
-    )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _funnel_output(spark.read.parquet(sink))
+    return _funnel_output(out)

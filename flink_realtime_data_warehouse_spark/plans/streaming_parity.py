@@ -9,24 +9,33 @@ input — reference topologies ST1/ST2/ST4 closed end-to-end
 (BaseLogApp.java:64-96, DwdTrafficUniqueVisitorDetail.java:55-80,
 DwdTrafficUserJumpDetail.java:88-136).
 
-Mechanics: the events table is flattened to the visitor-event shape
-(ts as NTZ epoch MICROseconds — session-timezone-proof and lossless),
-written as a single parquet file, streamed back through the stateful
-operator with an availableNow trigger into a parquet sink, and the
-sink is read back as the query result. One file → one micro-batch, so
-cross-batch ordering cannot diverge from the batch oracle; the
-operators themselves already handle multi-chunk groups.
+Mechanics: every row runs its fixture through one harness,
+``_stream_fixture``. The row hands it ordered input slices; slice ``i``
+lands as one parquet file with the ``i``-th modification time, and the
+stream reads one file per trigger, so slice ``i`` is micro-batch ``i``
+(an empty slice is an empty micro-batch). The row's ``start`` function
+runs the real job to completion with an availableNow trigger, and the
+row reads the job's output back as its result. Event time rides as NTZ
+epoch MICROseconds (session-timezone-proof and lossless). One-slice
+rows stream into a parquet append sink (``_run_stream``), so cross-
+batch ordering cannot diverge from the batch oracle; the operators
+themselves already handle multi-chunk groups. The scratch root is a
+``_session_tmpdir`` keyed by the row name: the lazy result may read it
+until the row's next-but-one call, and the rest are reaped at exit.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from flink_realtime_data_warehouse_spark.plans.registry import query
+from flink_realtime_data_warehouse_spark.sources.ingest import _session_tmpdir
 from flink_realtime_data_warehouse_spark.streaming.table_format import (
     FORMAT,
 )
@@ -43,6 +52,99 @@ _BOUNCE_WINDOW_US = 3600 * 1_000_000
 _ENTRY_EVENT_TYPE = "view"
 
 _EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
+
+
+def _stream_fixture(
+    spark: SparkSession,
+    row: str,
+    slices: list[DataFrame],
+    schema: str | StructType,
+    start: Callable[[DataFrame, str, str], StreamingQuery],
+) -> str:
+    """Stream ``slices`` through ``start(stream, out, ckpt)`` to
+    completion and return ``out``. Slice ``i`` is written as the single
+    parquet file ``src/i.parquet`` and read back as micro-batch ``i``."""
+    root = _session_tmpdir(row)
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    for i, df in enumerate(slices):
+        stage = os.path.join(root, f"slice_{i}")
+        df.coalesce(1).write.parquet(stage)
+        # coalesce(1) writes exactly one part file, a footer-only one
+        # for an empty slice
+        (part,) = [f for f in os.listdir(stage) if f.startswith("part-")]
+        dst = os.path.join(src, f"{i}.parquet")
+        os.replace(os.path.join(stage, part), dst)
+        # the file source admits files in modification-time order
+        mtime = 1_000_000_000.0 + 100 * i
+        os.utime(dst, (mtime, mtime))
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    out = os.path.join(root, "out")
+    start(stream, out, os.path.join(root, "ckpt")).awaitTermination()
+    return out
+
+
+def _run_stream(
+    spark: SparkSession,
+    row: str,
+    flat: DataFrame,
+    schema: str | StructType,
+    op: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Stream ``flat`` as one slice through ``op`` into a parquet append
+    sink and read the sink back."""
+
+    def start(stream: DataFrame, out: str, ckpt: str) -> StreamingQuery:
+        return (
+            op(stream)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    return spark.read.parquet(_stream_fixture(spark, row, [flat], schema, start))
+
+
+#: the history-dedup ingest's ``clean`` store
+_CLEAN_SCHEMA = "doc_id bigint, text string, pbatch string"
+
+
+def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """The lake store at ``path``. Empty only when no batch ever created
+    it (the zero-row tier); a store that exists but cannot be read
+    fails loudly."""
+    if not FORMAT.exists(path):
+        return spark.createDataFrame([], schema)
+    return FORMAT.read(spark, path, schema)
+
+
+def _ingest_lake(spark: SparkSession, row: str, docs: DataFrame, **flags) -> str:
+    """``docs`` through the REAL ``start_history_dedup_ingest(**flags)``:
+    the history slice (doc_id % 5 != 4) as micro-batch 0, the incoming
+    slice as micro-batch 1. Returns the lake root."""
+    from flink_realtime_data_warehouse_spark.operators.dedup import (
+        INCR_HISTORY_MOD,
+    )
+    from flink_realtime_data_warehouse_spark.streaming.jobs import (
+        start_history_dedup_ingest,
+    )
+
+    is_inc = F.pmod("doc_id", F.lit(INCR_HISTORY_MOD)) == INCR_HISTORY_MOD - 1
+    docs = docs.select("doc_id", "text")
+    return _stream_fixture(
+        spark,
+        row,
+        [docs.filter(~is_inc), docs.filter(is_inc)],
+        "doc_id bigint, text string",
+        lambda stream, out, ckpt: start_history_dedup_ingest(
+            spark, stream, out, ckpt, **flags
+        ),
+    )
 
 
 def _flat_events(spark: SparkSession, sf_dir: str, for_bounce: bool = False) -> DataFrame:
@@ -62,27 +164,6 @@ def _flat_events(spark: SparkSession, sf_dir: str, for_bounce: bool = False) -> 
         last_page.alias("last_page_id"),
         ts_us.alias("ts"),
     )
-
-
-def _run_stream(spark: SparkSession, flat: DataFrame, op) -> DataFrame:
-    """Materialize ``flat`` (one file), stream it through ``op``, return the sink."""
-    root = tempfile.mkdtemp(prefix="frdw_parity_")
-    src = os.path.join(root, "src")
-    sink = os.path.join(root, "sink")
-    ckpt = os.path.join(root, "ckpt")
-    flat.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(VISITOR_EVENT_SCHEMA).parquet(src)
-    out = op(stream)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink)
 
 
 _NTZ_DAY_US = 86_400_000_000
@@ -112,9 +193,12 @@ def st1_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the device's first-seen date — which is exactly the batch
     oracle's min-date window semantics.
     """
-    flat = _flat_events(spark, sf_dir)
     sink = _run_stream(
-        spark, flat, lambda s: correct_is_new(s, offset_ms=0, ts_per_ms=1000)
+        spark,
+        "st1_streaming_parity",
+        _flat_events(spark, sf_dir),
+        VISITOR_EVENT_SCHEMA,
+        lambda s: correct_is_new(s, offset_ms=0, ts_per_ms=1000),
     )
     return sink.select(
         F.col("page_id").cast("bigint").alias("event_id"),
@@ -139,9 +223,12 @@ def st2_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2 via the actual applyInPandasWithState pipeline: the state
     machine's first-emission-per-day equals the batch first-row-per-
     (user, day) window (no (user, ts) ties in the events table)."""
-    flat = _flat_events(spark, sf_dir)
     sink = _run_stream(
-        spark, flat, lambda s: daily_unique_visitors(s, offset_ms=0, ts_per_ms=1000)
+        spark,
+        "st2_streaming_parity",
+        _flat_events(spark, sf_dir),
+        VISITOR_EVENT_SCHEMA,
+        lambda s: daily_unique_visitors(s, offset_ms=0, ts_per_ms=1000),
     )
     return sink.select(
         F.col("page_id").cast("bigint").alias("event_id"),
@@ -187,42 +274,31 @@ def win_streaming_tumbling_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         F.lit("__flush").alias("event_type"),
         F.lit(0.0).alias("value"),
     )
-    root = tempfile.mkdtemp(prefix="frdw_winparity_")
-    src = os.path.join(root, "src")
-    sink = os.path.join(root, "sink")
-    ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "ts_us bigint, event_type string, value double"
-    ).parquet(src)
-    agg = (
-        stream.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
-        .withWatermark("event_time", "0 seconds")
-        .groupBy(F.window("event_time", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.timestamp_add(
-                "MICROSECOND", F.unix_micros(F.col("w.start")), F.expr(_EPOCH_NTZ)
-            ).alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    sink = _run_stream(
+        spark,
+        "win_streaming_tumbling_parity",
+        ev.unionByName(sentinel),
+        "ts_us bigint, event_type string, value double",
+        lambda s: (
+            s.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
+            .withWatermark("event_time", "0 seconds")
+            .groupBy(F.window("event_time", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
+            .select(
+                F.timestamp_add(
+                    "MICROSECOND", F.unix_micros(F.col("w.start")), F.expr(_EPOCH_NTZ)
+                ).alias("window_start"),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
+        ),
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(sink)
-        .filter(F.col("event_type") != "__flush")
+        sink.filter(F.col("event_type") != "__flush")
         .orderBy("window_start", "event_type")
     )
 
@@ -267,7 +343,9 @@ def st4_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = _run_stream(
         spark,
+        "st4_streaming_parity",
         flat.unionByName(flush),
+        VISITOR_EVENT_SCHEMA,
         lambda s: detect_bounces(
             s.withColumn("event_time", F.timestamp_micros(F.col("ts"))).withWatermark(
                 "event_time", "0 seconds"
@@ -283,6 +361,61 @@ def st4_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
+def _minute_rollup_store(spark: SparkSession, row: str, sf_dir: str) -> str:
+    """The events streamed as FOUR slices (``event_id % 4``), one per
+    trigger, through the REAL ``continuous_minute_rollup_job``, so the
+    store is assembled from four independent partial merges. Returns
+    the store path.
+
+    Session-tz proofing: event time rides as NTZ epoch µs, truncated to
+    ms with integer arithmetic; ``timestamp_millis``/``unix_millis``
+    round-trip the instant exactly under any session timezone, and the
+    store keys on the epoch-ms LONG itself. Minute truncation composes
+    over the µs→ms truncation, so buckets equal the oracle's
+    ``epoch_us // 60e6`` exactly.
+    """
+    from flink_realtime_data_warehouse_spark.streaming.rollup import (
+        continuous_minute_rollup_job,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    ts_us = F.timestamp_diff("MICROSECOND", F.expr(_EPOCH_NTZ), F.col("ts"))
+    flat = ev.select(
+        F.timestamp_millis((ts_us / F.lit(1000)).cast("bigint")).alias("event_time"),
+        "value",
+        "event_id",
+    )
+    slices = [
+        flat.filter(F.pmod("event_id", F.lit(4)) == i).drop("event_id")
+        for i in range(4)
+    ]
+    return _stream_fixture(
+        spark,
+        row,
+        slices,
+        "event_time timestamp, value double",
+        continuous_minute_rollup_job,
+    )
+
+
+def _rollup_rows(spark: SparkSession, store: str) -> DataFrame:
+    """Serving read of the rollup store, rounded like the oracle."""
+    from flink_realtime_data_warehouse_spark.streaming.rollup import (
+        read_minute_rollup,
+    )
+
+    return (
+        read_minute_rollup(spark, store)
+        .select(
+            "bucket_ms",
+            "n_events",
+            F.round("total_value", 2).alias("total_value"),
+            F.round("max_value", 2).alias("max_value"),
+        )
+        .orderBy("bucket_ms")
+    )
+
+
 @query(
     "rollup_streaming_parity",
     oracle="""
@@ -295,51 +428,12 @@ def st4_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL continuous-aggregate store (streaming/rollup.py)
-    must serve exactly the batch minute aggregation: events are dumped
-    as FOUR files and streamed one-file-per-trigger, so the store is
-    assembled from four independent partial merges — the cross-batch
-    additivity (count→sum, sum→sum, max→max) is what the oracle checks.
-
-    Session-tz proofing: event time rides as NTZ epoch µs, truncated to
-    ms with integer arithmetic; ``timestamp_millis``/``unix_millis``
-    round-trip the instant exactly under any session timezone, and the
-    store keys on the epoch-ms LONG itself. Minute truncation composes
-    over the µs→ms truncation, so buckets equal the oracle's
-    ``epoch_us // 60e6`` exactly.
-    """
-    from flink_realtime_data_warehouse_spark.streaming.rollup import (
-        continuous_minute_rollup_job,
-        read_minute_rollup,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    ts_us = F.timestamp_diff("MICROSECOND", F.expr(_EPOCH_NTZ), F.col("ts"))
-    flat = ev.select(
-        F.timestamp_millis((ts_us / F.lit(1000)).cast("bigint")).alias("event_time"),
-        "value",
-    )
-    root = tempfile.mkdtemp(prefix="frdw_rollup_parity_")
-    src = os.path.join(root, "src")
-    flat.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("event_time timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    store = os.path.join(root, "store")
-    q = continuous_minute_rollup_job(
-        stream, store, os.path.join(root, "ckpt")
-    )
-    q.awaitTermination()
-    return (
-        read_minute_rollup(spark, store)
-        .select(
-            "bucket_ms",
-            "n_events",
-            F.round("total_value", 2).alias("total_value"),
-            F.round("max_value", 2).alias("max_value"),
-        )
-        .orderBy("bucket_ms")
+    must serve exactly the batch minute aggregation: the store is built
+    from four micro-batches (``_minute_rollup_store``), so the cross-
+    batch additivity (count→sum, sum→sum, max→max) is what the oracle
+    checks."""
+    return _rollup_rows(
+        spark, _minute_rollup_store(spark, "rollup_streaming_parity", sf_dir)
     )
 
 
@@ -365,7 +459,7 @@ def rollup_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention policy over the REAL continuous-aggregate store: the
     events stream builds the minute-partial store
-    (``continuous_minute_rollup_job``), ``expire_rollup_chunks``
+    (``_minute_rollup_store``), ``expire_rollup_chunks``
     drops every pday chunk outside the newest 7 PRESENT day-partitions
     (the data-defined ``keep_days`` form — no wall clock, so the
     oracle can state the cutoff), and the serving read must equal the
@@ -377,42 +471,12 @@ def rollup_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the hypertable drop_chunks contract — 23 of 30 day-chunks drop
     at every SF, surviving bytes untouched)."""
     from flink_realtime_data_warehouse_spark.streaming.rollup import (
-        continuous_minute_rollup_job,
         expire_rollup_chunks,
-        read_minute_rollup,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    ts_us = F.timestamp_diff("MICROSECOND", F.expr(_EPOCH_NTZ), F.col("ts"))
-    flat = ev.select(
-        F.timestamp_millis((ts_us / F.lit(1000)).cast("bigint")).alias(
-            "event_time"
-        ),
-        "value",
-    )
-    root = tempfile.mkdtemp(prefix="frdw_rollup_retention_")
-    src = os.path.join(root, "src")
-    flat.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("event_time timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    store = os.path.join(root, "store")
-    continuous_minute_rollup_job(
-        stream, store, os.path.join(root, "ckpt")
-    ).awaitTermination()
+    store = _minute_rollup_store(spark, "rollup_retention_audit", sf_dir)
     expire_rollup_chunks(spark, store, keep_days=7)
-    return (
-        read_minute_rollup(spark, store)
-        .select(
-            "bucket_ms",
-            "n_events",
-            F.round("total_value", 2).alias("total_value"),
-            F.round("max_value", 2).alias("max_value"),
-        )
-        .orderBy("bucket_ms")
-    )
+    return _rollup_rows(spark, store)
 
 
 @query(
@@ -462,43 +526,34 @@ def win_session_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("__flush").alias("uid"),
         F.lit(0.0).alias("value"),
     )
-    root = tempfile.mkdtemp(prefix="frdw_sessparity_")
-    src = os.path.join(root, "src")
-    sink = os.path.join(root, "sink")
-    ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("ts_us bigint, uid string, value double").parquet(src)
-    agg = (
-        stream.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
-        .withWatermark("event_time", "0 seconds")
-        .groupBy(F.session_window("event_time", "30 minutes").alias("w"), "uid")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.timestamp_add(
-                "MICROSECOND", F.unix_micros(F.col("w.start")), F.expr(_EPOCH_NTZ)
-            ).alias("session_start"),
-            F.timestamp_add(
-                "MICROSECOND", F.unix_micros(F.col("w.end")), F.expr(_EPOCH_NTZ)
-            ).alias("session_end"),
-            "uid",
-            "n_events",
-            "total_value",
-        )
+    sink = _run_stream(
+        spark,
+        "win_session_streaming_parity",
+        ev.unionByName(sentinel),
+        "ts_us bigint, uid string, value double",
+        lambda s: (
+            s.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
+            .withWatermark("event_time", "0 seconds")
+            .groupBy(F.session_window("event_time", "30 minutes").alias("w"), "uid")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
+            .select(
+                F.timestamp_add(
+                    "MICROSECOND", F.unix_micros(F.col("w.start")), F.expr(_EPOCH_NTZ)
+                ).alias("session_start"),
+                F.timestamp_add(
+                    "MICROSECOND", F.unix_micros(F.col("w.end")), F.expr(_EPOCH_NTZ)
+                ).alias("session_end"),
+                "uid",
+                "n_events",
+                "total_value",
+            )
+        ),
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(sink)
-        .filter(F.col("uid") != "__flush")
+        sink.filter(F.col("uid") != "__flush")
         .select(
             F.col("uid").cast("bigint").alias("user_id"),
             "session_start",
@@ -542,23 +597,13 @@ def export_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.timestamp_diff("MICROSECOND", F.expr(_EPOCH_NTZ), F.col("ts")).alias("ts"),
     )
-    root = tempfile.mkdtemp(prefix="frdw_seqparity_")
-    src = os.path.join(root, "src")
-    sink = os.path.join(root, "sink")
-    ckpt = os.path.join(root, "ckpt")
-    flat.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(SEQ_EVENT_SCHEMA).parquet(src)
-    q = (
-        build_user_sequences(stream, cap=64)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink).orderBy("user_id")
+    return _run_stream(
+        spark,
+        "export_streaming_parity",
+        flat,
+        SEQ_EVENT_SCHEMA,
+        lambda s: build_user_sequences(s, cap=64),
+    ).orderBy("user_id")
 
 
 def _gate_parity_oracle() -> str:
@@ -645,59 +690,19 @@ def histdedup_gate_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFra
     — same banding, but driven through checkpoints, pbatch partitions,
     and the persisted stores instead of one logical plan.
     """
-    import shutil
-
-    from flink_realtime_data_warehouse_spark.operators.dedup import (
-        INCR_HISTORY_MOD,
+    out = _ingest_lake(
+        spark,
+        "histdedup_gate_streaming_parity",
+        load_table(spark, sf_dir, "documents"),
+        near_dup_gate=True,
     )
-    from flink_realtime_data_warehouse_spark.streaming.jobs import (
-        start_history_dedup_ingest,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_inc = F.pmod("doc_id", F.lit(INCR_HISTORY_MOD)) == INCR_HISTORY_MOD - 1
-    root = tempfile.mkdtemp(prefix="frdw_gateparity_")
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def _drop(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(root, f"slice_{name}")
-        df.select(
-            F.to_json(F.struct("doc_id", "text")).alias("v")
-        ).coalesce(1).write.mode("overwrite").text(tmp)
-        dst = os.path.join(src, name)
-        parts = [f for f in os.listdir(tmp) if f.startswith("part-")]
-        if parts:
-            shutil.move(os.path.join(tmp, parts[0]), dst)
-        else:  # empty slice (zero-row tier): an empty file = empty batch
-            open(dst, "w").close()
-        os.utime(dst, (mtime, mtime))
-
-    # modification times order the micro-batches: history first
-    _drop(docs.filter(~is_inc).select("doc_id", "text"), "0.jsonl", 1_000_000_000.0)
-    _drop(docs.filter(is_inc).select("doc_id", "text"), "1.jsonl", 1_000_000_100.0)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out = os.path.join(root, "out")
-    q = start_history_dedup_ingest(
-        spark, stream, out, os.path.join(root, "ckpt"), near_dup_gate=True
-    )
-    q.awaitTermination()
-    near_path = os.path.join(out, "near_dups")
-    try:
-        result = FORMAT.read(
-            spark, near_path, "doc_id bigint, doc_hist bigint, pbatch string"
-        )
-    except Exception:  # zero-row tier: no batch ever wrote the sink
-        result = spark.createDataFrame(
-            [], "doc_id bigint, doc_hist bigint, pbatch string"
-        )
     return (
-        result.select(F.col("doc_id").alias("doc_new"), "doc_hist")
+        _read_store(
+            spark,
+            os.path.join(out, "near_dups"),
+            "doc_id bigint, doc_hist bigint, pbatch string",
+        )
+        .select(F.col("doc_id").alias("doc_new"), "doc_hist")
         .distinct()
         .orderBy("doc_new", "doc_hist")
     )
@@ -744,8 +749,6 @@ def ann_ivf_streaming_ingest_checked(spark: SparkSession, sf_dir: str) -> DataFr
     floor differs from the batch row's — measured, it is exactly the
     subset-trained-quantizer cost, not the streaming machinery).
     """
-    import shutil
-
     from flink_realtime_data_warehouse_spark.operators.similarity import (
         _SCORED_SCHEMA,
         _load_emb,
@@ -760,42 +763,18 @@ def ann_ivf_streaming_ingest_checked(spark: SparkSession, sf_dir: str) -> DataFr
 
     emb = _load_emb(spark, sf_dir)
     exact = ann_cosine_topk(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="frdw_annstream_")
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def _drop(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(root, f"slice_{name}")
-        df.select(F.to_json(F.struct("vec_id", "v")).alias("j")).coalesce(
-            1
-        ).write.mode("overwrite").text(tmp)
-        dst = os.path.join(src, name)
-        parts = [f for f in os.listdir(tmp) if f.startswith("part-")]
-        if parts:
-            shutil.move(os.path.join(tmp, parts[0]), dst)
-        else:  # zero-row tier: an empty file = an empty micro-batch
-            open(dst, "w").close()
-        os.utime(dst, (mtime, mtime))
-
+    # a parquet slice carries the stream's types: the ingest reads floats
+    vecs = emb.select("vec_id", F.col("v").cast("array<float>"))
     m5 = F.pmod("vec_id", F.lit(5))
-    _drop(emb.filter(m5 < 3), "0.jsonl", 1_000_000_000.0)
-    _drop(emb.filter(m5 == 3), "1.jsonl", 1_000_000_100.0)
-    _drop(emb.filter(m5 == 4), "2.jsonl", 1_000_000_200.0)
-
-    stream = (
-        spark.readStream.schema("vec_id bigint, v array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    index_root = os.path.join(root, "index")
-    q = start_embedding_ingest(
+    index_root = _stream_fixture(
         spark,
-        stream,
-        index_root,
-        os.path.join(root, "ckpt"),
-        compact_every=3,
+        "ann_ivf_streaming_ingest_checked",
+        [vecs.filter(m5 < 3), vecs.filter(m5 == 3), vecs.filter(m5 == 4)],
+        "vec_id bigint, v array<float>",
+        lambda stream, out, ckpt: start_embedding_ingest(
+            spark, stream, out, ckpt, compact_every=3
+        ),
     )
-    q.awaitTermination()
 
     if os.path.exists(os.path.join(index_root, "_built_pbatch")):
         qp = _query_block(spark, emb, sf_dir)
@@ -846,60 +825,20 @@ def lake_takedown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     erased, content blocked), the posture takedown obligations want;
     the policy fork is test-pinned in tests/test_takedown.py.
     """
-    import shutil
-
-    from flink_realtime_data_warehouse_spark.streaming.jobs import (
-        start_history_dedup_ingest,
-    )
     from flink_realtime_data_warehouse_spark.streaming.retention import (
         takedown_documents,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    is_inc = F.pmod("doc_id", F.lit(5)) == 4
-    root = tempfile.mkdtemp(prefix="frdw_takedown_")
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def _drop(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(root, f"slice_{name}")
-        df.select(
-            F.to_json(F.struct("doc_id", "text")).alias("v")
-        ).coalesce(1).write.mode("overwrite").text(tmp)
-        dst = os.path.join(src, name)
-        parts = [f for f in os.listdir(tmp) if f.startswith("part-")]
-        if parts:
-            shutil.move(os.path.join(tmp, parts[0]), dst)
-        else:
-            open(dst, "w").close()
-        os.utime(dst, (mtime, mtime))
-
-    _drop(docs.filter(~is_inc).select("doc_id", "text"), "0.jsonl", 1_000_000_000.0)
-    _drop(docs.filter(is_inc).select("doc_id", "text"), "1.jsonl", 1_000_000_100.0)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out = os.path.join(root, "out")
-    q = start_history_dedup_ingest(
-        spark, stream, out, os.path.join(root, "ckpt"), near_dup_gate=True
-    )
-    q.awaitTermination()
-
+    out = _ingest_lake(spark, "lake_takedown_audit", docs, near_dup_gate=True)
     takedown_documents(
         spark, out, docs.filter(F.pmod("doc_id", F.lit(17)) == 3).select("doc_id")
     )
-
-    clean_path = os.path.join(out, "clean")
-    try:
-        result = FORMAT.read(
-            spark, clean_path, "doc_id bigint, text string, pbatch string"
-        )
-    except Exception:  # zero-row tier: no batch ever wrote the sink
-        result = spark.createDataFrame([], "doc_id bigint, text string, pbatch string")
-    return result.select("doc_id").orderBy("doc_id")
+    return (
+        _read_store(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA)
+        .select("doc_id")
+        .orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -946,58 +885,19 @@ def lake_pii_scrubbed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the scrub adds three map-only ``regexp_replace``
     expressions to the clean sink's project — zero new shuffles,
     zero new scans."""
-    import shutil
-
     from flink_realtime_data_warehouse_spark.operators.pii import _planted
-    from flink_realtime_data_warehouse_spark.streaming.jobs import (
-        start_history_dedup_ingest,
+
+    out = _ingest_lake(
+        spark,
+        "lake_pii_scrubbed_ingest",
+        _planted(load_table(spark, sf_dir, "documents")),
+        redact_pii=True,
     )
-
-    docs = _planted(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", "text"
+    return (
+        _read_store(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA)
+        .select("doc_id", "text")
+        .orderBy("doc_id")
     )
-    is_inc = F.pmod("doc_id", F.lit(5)) == 4
-    root = tempfile.mkdtemp(prefix="frdw_piiscrub_")
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def _drop(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(root, f"slice_{name}")
-        df.select(
-            F.to_json(F.struct("doc_id", "text")).alias("v")
-        ).coalesce(1).write.mode("overwrite").text(tmp)
-        dst = os.path.join(src, name)
-        parts = [f for f in os.listdir(tmp) if f.startswith("part-")]
-        if parts:
-            shutil.move(os.path.join(tmp, parts[0]), dst)
-        else:
-            open(dst, "w").close()
-        os.utime(dst, (mtime, mtime))
-
-    _drop(docs.filter(~is_inc), "0.jsonl", 1_000_000_000.0)
-    _drop(docs.filter(is_inc), "1.jsonl", 1_000_000_100.0)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out = os.path.join(root, "out")
-    start_history_dedup_ingest(
-        spark, stream, out, os.path.join(root, "ckpt"), redact_pii=True
-    ).awaitTermination()
-
-    try:
-        result = FORMAT.read(
-            spark,
-            os.path.join(out, "clean"),
-            "doc_id bigint, text string, pbatch string",
-        )
-    except Exception:  # zero-row tier: no batch ever wrote the sink
-        result = spark.createDataFrame(
-            [], "doc_id bigint, text string, pbatch string"
-        )
-    return result.select("doc_id", "text").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1045,55 +945,18 @@ def histdedup_bloom_streaming_parity(
     windows, and overflow rebuild are pinned in
     tests/test_bloom_stream.py.
     """
-    import shutil
-
-    from flink_realtime_data_warehouse_spark.streaming.jobs import (
-        start_history_dedup_ingest,
+    out = _ingest_lake(
+        spark,
+        "histdedup_bloom_streaming_parity",
+        load_table(spark, sf_dir, "documents"),
+        bloom_prefilter=True,
     )
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_inc = F.pmod("doc_id", F.lit(5)) == 4
-    root = tempfile.mkdtemp(prefix="frdw_bloomparity_")
-    src = os.path.join(root, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def _drop(df: DataFrame, name: str, mtime: float) -> None:
-        tmp = os.path.join(root, f"slice_{name}")
-        df.select(
-            F.to_json(F.struct("doc_id", "text")).alias("v")
-        ).coalesce(1).write.mode("overwrite").text(tmp)
-        dst = os.path.join(src, name)
-        parts = [f for f in os.listdir(tmp) if f.startswith("part-")]
-        if parts:
-            shutil.move(os.path.join(tmp, parts[0]), dst)
-        else:
-            open(dst, "w").close()
-        os.utime(dst, (mtime, mtime))
-
-    _drop(docs.filter(~is_inc).select("doc_id", "text"), "0.jsonl", 1_000_000_000.0)
-    _drop(docs.filter(is_inc).select("doc_id", "text"), "1.jsonl", 1_000_000_100.0)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
+    clean = _read_store(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA).select(
+        "doc_id", F.lit("new").alias("status")
     )
-    out = os.path.join(root, "out")
-    q = start_history_dedup_ingest(
-        spark, stream, out, os.path.join(root, "ckpt"), bloom_prefilter=True
-    )
-    q.awaitTermination()
-
-    def _read(sub: str, schema: str) -> DataFrame:
-        try:
-            return FORMAT.read(spark, os.path.join(out, sub), schema)
-        except Exception:  # zero-row tier: the sink was never written
-            return spark.createDataFrame([], schema)
-
-    clean = _read(
-        "clean", "doc_id bigint, text string, pbatch string"
-    ).select("doc_id", F.lit("new").alias("status"))
-    dups = _read(
-        "dups", "doc_id bigint, content_hash string, status string, pbatch string"
+    dups = _read_store(
+        spark,
+        os.path.join(out, "dups"),
+        "doc_id bigint, content_hash string, status string, pbatch string",
     ).select("doc_id", "status")
     return clean.unionByName(dups).orderBy("doc_id")

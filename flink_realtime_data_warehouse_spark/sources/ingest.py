@@ -79,20 +79,19 @@ DOCS_SCHEMA = (
 )
 
 #: session-scoped temp-dir lifecycle (ADVICE r9): the staged parquet /
-#: landing dirs back LAZY DataFrames, so they cannot be deleted before
+#: landing dirs and the streaming query rows' scratch roots (keyed by
+#: row name) back LAZY DataFrames, so they cannot be deleted before
 #: the caller consumes them — but a long-lived session replaying the
 #: registry must not accumulate one orphan per invocation either.
 #: Keep the most recent KEEP dirs per kind (the previous invocation may
 #: still be draining in an interleaved runner), reap older ones on the
 #: next call, and sweep whatever remains at interpreter exit.
-#: ASSUMPTION (ADVICE r9): the default of 2 is sized for the
-#: sequential runners this repo ships (pytest, replay_registry,
-#: bench) — one in-flight consumer plus one still-draining
-#: predecessor. A harness that interleaves ≥_TMP_KEEP+1 concurrent
-#: invocations of the SAME kind would reap a staged dir backing a
-#: still-unconsumed lazy DataFrame; such a runner must raise
-#: FRDW_TMP_KEEP (env, read once at import) to its concurrency level.
-_TMP_KEEP = max(1, int(os.environ.get("FRDW_TMP_KEEP", "2")))
+#: ASSUMPTION (ADVICE r9): 2 is sized for the sequential runners this
+#: repo ships (pytest, replay_registry, bench) — one in-flight
+#: consumer plus one still-draining predecessor. A runner that
+#: interleaves three or more invocations of the SAME kind would reap a
+#: dir backing a still-unconsumed lazy DataFrame.
+_TMP_KEEP = 2
 _TMP_REGISTRY: dict[str, list[str]] = {}
 _TMP_LOCK = threading.Lock()
 

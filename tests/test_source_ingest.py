@@ -129,3 +129,31 @@ def test_session_tmpdirs_are_reaped(tmp_path, monkeypatch):
     assert alive == made[-ing._TMP_KEEP:]
     ing._reap_all_tmpdirs()
     assert not any(os.path.isdir(d) for d in made)
+
+
+def test_streaming_rows_reap_their_scratch_roots(spark, sf_dir, tmp_path, monkeypatch):
+    """A streaming query row keeps at most _TMP_KEEP scratch roots alive
+    across repeated calls, and the exit sweep removes the rest. Each
+    result is collected before the row's next call, so a root is never
+    reaped while its sink is still being read."""
+    import tempfile
+
+    import __spark_entry__ as em
+    from flink_realtime_data_warehouse_spark.sources import ingest as ing
+
+    monkeypatch.setattr(ing, "_TMP_REGISTRY", {})
+    queries = em.queries()
+    roots = {}
+    for name in ("st2_streaming_parity", "histdedup_bloom_streaming_parity"):
+        tmp = tmp_path / name
+        tmp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+        first = sorted(queries[name](spark, sf_dir).collect())
+        assert first
+        for _ in range(2):
+            assert sorted(queries[name](spark, sf_dir).collect()) == first
+        roots[name] = [d for d in os.listdir(tmp) if d.startswith("frdw_")]
+        assert 0 < len(roots[name]) <= ing._TMP_KEEP, roots
+    ing._reap_all_tmpdirs()
+    left = [d for name in roots for d in os.listdir(tmp_path / name)]
+    assert not left, left
