@@ -22,6 +22,13 @@ from pyspark.sql import functions as F
 from flink_realtime_data_warehouse_spark.operators.similarity import EMB_CLEAN_SQL
 from flink_realtime_data_warehouse_spark.plans.registry import query
 from flink_realtime_data_warehouse_spark.sources.tables import load_table
+from flink_realtime_data_warehouse_spark.streaming.pbatch import (
+    COMPACTED_PBATCH,
+    fold_store,
+    read_history,
+    write_partition,
+)
+from flink_realtime_data_warehouse_spark.streaming.table_format import FORMAT
 
 MINHASH_K = 12  #: number of hash functions in the MinHash signature
 MINHASH_BAND_ROWS = 3  #: rows per LSH band (→ 4 bands)
@@ -1231,6 +1238,23 @@ def _bands_from_shingles(sh: DataFrame) -> DataFrame:
     )
 
 
+def _band_collisions(bands: DataFrame, hist: DataFrame) -> DataFrame:
+    """Distinct ``(doc_new, doc_hist)`` pairs whose band rows share a
+    ``(band, key)``: the probe join of every band index, persisted
+    or in-plan."""
+    return (
+        bands.alias("n")
+        .join(
+            hist.alias("h"),
+            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
+        )
+        .select(
+            F.col("n.doc_id").alias("doc_new"), F.col("h.doc_id").alias("doc_hist")
+        )
+        .distinct()
+    )
+
+
 _MINHASH_PAIRS_DFCAP_ORACLE = f"""
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 sh0 AS (
@@ -1280,10 +1304,6 @@ def build_dedup_lsh_index(docs: DataFrame, path: str) -> None:
     partitioned by band (the probe joins on (band, key); at real scale
     bucket each band directory by key via operators/scale.py so probes
     co-locate shuffle-free)."""
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
     FORMAT.swap_rewrite(docs.sparkSession, path, band_keys(docs), "band")
 
 
@@ -1291,10 +1311,6 @@ def append_dedup_lsh_index(new_docs: DataFrame, path: str) -> None:
     """Incrementally index newly accepted docs: band rows APPEND —
     existing index files are never rewritten (same economics as the
     ANN index appends in operators/similarity.py)."""
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
     FORMAT.append_partitioned(band_keys(new_docs), path, "band")
 
 
@@ -1305,23 +1321,7 @@ def probe_dedup_lsh_index(
     distinct (doc_new, doc_hist) sharing >= 1 full band. The probe
     shuffles only the batch's band rows (|batch| x bands) against the
     index join — history text is never read, never shuffled."""
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
-    hist = FORMAT.read(spark, path)
-    probe = band_keys(new_docs)
-    return (
-        probe.alias("n")
-        .join(
-            hist.alias("h"),
-            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"), F.col("h.doc_id").alias("doc_hist")
-        )
-        .distinct()
-    )
+    return _band_collisions(band_keys(new_docs), FORMAT.read(spark, path))
 
 
 @query("dedup_incremental_lsh", oracle=_INCR_LSH_ORACLE)
@@ -1335,18 +1335,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     is_inc = F.pmod("doc_id", F.lit(INCR_HISTORY_MOD)) == INCR_HISTORY_MOD - 1
     bands = band_keys(docs)
-    inc = bands.filter(is_inc).alias("n")
-    hist = bands.filter(~is_inc).alias("h")
-    return (
-        inc.join(
-            hist,
-            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"), F.col("h.doc_id").alias("doc_hist")
-        )
-        .distinct()
-        .orderBy("doc_new", "doc_hist")
+    return _band_collisions(bands.filter(is_inc), bands.filter(~is_inc)).orderBy(
+        "doc_new", "doc_hist"
     )
 
 
@@ -1413,22 +1403,10 @@ def dedup_incremental_lsh_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") > NGRAM_DF_CAP)
         .select("s")
     )
-    hbands = _bands_from_shingles(
-        sh_hist.join(F.broadcast(hot_hist), "s", "left_anti")
-    ).alias("h")
+    hbands = _bands_from_shingles(sh_hist.join(F.broadcast(hot_hist), "s", "left_anti"))
     # incoming caps against df over history + batch = the whole corpus
-    ibands = _bands_from_shingles(_shingle_df_capped(docs).filter(is_inc)).alias("n")
-    return (
-        ibands.join(
-            hbands,
-            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"), F.col("h.doc_id").alias("doc_hist")
-        )
-        .distinct()
-        .orderBy("doc_new", "doc_hist")
-    )
+    ibands = _bands_from_shingles(_shingle_df_capped(docs).filter(is_inc))
+    return _band_collisions(ibands, hbands).orderBy("doc_new", "doc_hist")
 
 
 @query("dedup_incremental_lsh_dfcap_compacted", oracle=_INCR_LSH_DFCAP_ORACLE)
@@ -1438,17 +1416,13 @@ def dedup_incremental_lsh_dfcap_compacted(
     """The PERSISTED ingest gate driven through a COMPACTION boundary
     under the DuckDB oracle: build the df-capped index from the
     history slice (``build_dedup_lsh_index_capped``), compact it
-    (``compact_dedup_lsh_index_capped`` — the df store folds to one
-    row per shingle, the band store to consolidated band partitions),
+    (``compact_dedup_lsh_index_capped``, which folds the df store to
+    one row per shingle and the band store to one sentinel partition),
     then probe the incoming slice. Same oracle as
     ``dedup_incremental_lsh_dfcap``: compaction preserves the
     accumulated df exactly, so the hot set, every band, and every
-    candidate are unchanged — previously pinned only by a unit test,
-    now hash-checked by the driver. (The STREAMING-layout compaction
-    twin is oracle-covered by ``histdedup_gate_streaming_parity`` plus
-    the cadenced-compaction parity tests.)"""
-    import os
-
+    candidate are unchanged. The index has the streaming gate's
+    layout, so this row also covers the fold the ingest runs."""
     from flink_realtime_data_warehouse_spark.sources.ingest import _session_tmpdir
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1456,13 +1430,7 @@ def dedup_incremental_lsh_dfcap_compacted(
     idx = _session_tmpdir("dedup_incremental_lsh_dfcap_compacted")
     build_dedup_lsh_index_capped(docs.filter(~is_inc), idx)
     compact_dedup_lsh_index_capped(spark, idx)
-    if not any(
-        f.endswith(".parquet")
-        # the BANDS store: a zero-row build writes an empty-but-footered
-        # df file yet a band-partitioned dir with no files at all
-        for _r, _d, files in os.walk(os.path.join(idx, "bands"))
-        for f in files
-    ):  # zero-row tier: an empty history has no index to probe
+    if not FORMAT.has_data(f"{idx}/bands"):  # zero-row tier: no index to probe
         return spark.createDataFrame([], "doc_new bigint, doc_hist bigint")
     return probe_dedup_lsh_index_capped(
         spark, docs.filter(is_inc), idx
@@ -1522,23 +1490,52 @@ def _capped_batch_shingles(
     return sh.join(F.broadcast(hot), "s", "left_anti"), delta
 
 
+#: the capped index's two stores under its root, both partitioned by
+#: ``pbatch`` (``streaming/pbatch.py``)
+_LSH_STORE_SCHEMAS = {
+    "df": "s bigint, df bigint, pbatch string",
+    "bands": "doc_id bigint, band int, key string, pbatch string",
+}
+
+
+def _read_lsh_store(
+    spark: SparkSession, path: str, sub: str, exclude_pbatch: str | None = None
+) -> DataFrame:
+    """Committed rows of the index's ``sub`` store, minus the
+    in-flight partition ``exclude_pbatch`` when given."""
+    return read_history(spark, f"{path}/{sub}", _LSH_STORE_SCHEMAS[sub], exclude_pbatch)
+
+
+def _write_lsh_batch(
+    path: str, pbatch: str, bands: DataFrame, delta: DataFrame
+) -> None:
+    """Add one batch's band rows and df delta to the index as its
+    ``pbatch`` partition of each store."""
+    write_partition(bands, f"{path}/bands", pbatch)
+    write_partition(delta, f"{path}/df", pbatch)
+
+
 def build_dedup_lsh_index_capped(
     docs: DataFrame, path: str, cap: int = NGRAM_DF_CAP
 ) -> None:
     """Materialize the df-capped band index for an ingested corpus:
-    ``{path}/bands`` (partitioned by band — bucket each band dir by
-    key via operators/scale.py at real scale so probes co-locate
-    shuffle-free) plus ``{path}/df``, the append-only per-batch
-    shingle document-frequency store the cap is computed against."""
+    ``{path}/bands`` plus ``{path}/df``, the per-batch shingle
+    document-frequency store the cap is computed against. Both stores
+    are partitioned by ``pbatch``; a build replaces each with one
+    ``COMPACTED_PBATCH`` partition, so a built index is a folded one."""
     from pyspark import StorageLevel
 
+    spark = docs.sparkSession
     sh_capped, delta = _capped_batch_shingles(docs, None, cap)
     sh_capped = sh_capped.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        _bands_from_shingles(sh_capped).write.mode("overwrite").partitionBy(
-            "band"
-        ).parquet(f"{path}/bands")
-        delta.write.mode("overwrite").parquet(f"{path}/df")
+        for sub, rows in (("bands", _bands_from_shingles(sh_capped)), ("df", delta)):
+            FORMAT.swap_rewrite(
+                spark,
+                f"{path}/{sub}",
+                rows.withColumn("pbatch", F.lit(COMPACTED_PBATCH)),
+                "pbatch",
+            )
     finally:
         sh_capped.unpersist()
 
@@ -1547,146 +1544,62 @@ def append_dedup_lsh_index_capped(
     new_docs: DataFrame, path: str, cap: int = NGRAM_DF_CAP
 ) -> None:
     """Incrementally index newly accepted docs, capped against the
-    accumulated df (store + this batch): band rows and the batch's df
-    delta both APPEND — existing files are never rewritten. Batch
-    band rows are computed with the df known NOW; earlier batches'
-    rows keep the df of THEIR ingest time (the honest incremental
-    asymmetry — once a shingle crosses the cap, every later batch
-    bands without it). Replay idempotency for streaming callers lives
-    in the pbatch dynamic-overwrite composition
-    (streaming/jobs.py::start_history_dedup_ingest)."""
+    accumulated df (store + this batch): the band rows and the batch's
+    df delta land as a fresh ``pbatch`` partition of each store, and
+    existing files are never rewritten. Batch band rows are computed
+    with the df known NOW; earlier batches' rows keep the df of THEIR
+    ingest time (the honest incremental asymmetry: once a shingle
+    crosses the cap, every later batch bands without it). The
+    streaming gate (streaming/jobs.py::start_history_dedup_ingest)
+    writes the same partitions keyed by its batch id, which makes a
+    redelivered batch idempotent."""
+    import uuid
+
     from pyspark import StorageLevel
 
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
-    spark = new_docs.sparkSession
-    for sub in ("df", "bands"):  # roll back a crashed compaction swap
-        FORMAT.repair(path, f"{path}/{sub}")
-    stored = FORMAT.read(spark, f"{path}/df", _LSH_STORE_SCHEMAS["df"])
+    # roll back a crashed compaction swap before writing beside it (the
+    # df store's read below repairs that one)
+    FORMAT.repair(path, f"{path}/bands")
+    stored = _read_lsh_store(new_docs.sparkSession, path, "df")
     sh_capped, delta = _capped_batch_shingles(new_docs, stored, cap)
     sh_capped = sh_capped.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        FORMAT.append_partitioned(
-            _bands_from_shingles(sh_capped), f"{path}/bands", "band"
-        )
-        FORMAT.append(delta, f"{path}/df")
+        _write_lsh_batch(path, uuid.uuid4().hex, _bands_from_shingles(sh_capped), delta)
     finally:
         sh_capped.unpersist()
-
-
-#: pbatch value stamped on compacted rows of a streaming-layout store.
-#: Real pbatch values are ``{run_id}-{batch_id}`` with a hex run_id
-#: minted by streaming/jobs.py::_incarnation_id, so the sentinel can
-#: never collide with a live batch partition — and the streaming
-#: reads' ``pbatch != <current>`` exclusion therefore always KEEPS
-#: compacted history (the pre-r8 compaction dropped the column, the
-#: explicit-schema read surfaced it as NULL, and ``NULL != x`` is
-#: NULL → every compacted row silently vanished; ADVICE r7).
-COMPACTED_PBATCH = "__compacted__"
-
-_LSH_STORE_SCHEMAS = {
-    "df": "s bigint, df bigint",
-    "bands": "doc_id bigint, band int, key string",
-}
-
-
-def _is_pbatch_layout(store: str) -> bool:
-    """True when a persisted LSH sub-store was written by the streaming
-    ingest (one ``pbatch=`` partition dir per micro-batch) rather than
-    the batch builders (unpartitioned df / band-partitioned bands)."""
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
-    return bool(FORMAT.list_partitions(store, "pbatch"))
 
 
 def compact_dedup_lsh_index_capped(
     spark: SparkSession, path: str, exclude_pbatch: str | None = None
 ) -> None:
-    """Fold the capped index's append-only stores: the df store to ONE
-    row per shingle (sum of per-batch deltas — the accumulated df is
-    preserved exactly, so the hot set and every future band are
-    unchanged) and the band store into consolidated partitions (one
-    write instead of one file-set per append). This is the compaction
-    the per-batch economics assume: without it the df aggregation
-    scans one row per (shingle, batch) instead of per shingle, and the
-    band probe lists an ever-growing file set.
+    """Fold the capped index's per-batch partitions onto the
+    ``COMPACTED_PBATCH`` partition: the df store to ONE row per
+    shingle (sum of per-batch deltas, so the accumulated df, the hot
+    set and every future band are unchanged) and the band store to one
+    file set. This is the compaction the per-batch economics assume:
+    without it the df aggregation scans one row per (shingle, batch)
+    instead of per shingle, and the band probe lists an ever-growing
+    file set.
 
-    Streaming-layout stores (``pbatch=`` partitions, written by
-    streaming/jobs.py::start_history_dedup_ingest) keep the ``pbatch``
-    column through compaction: folded rows land on the
-    ``COMPACTED_PBATCH`` sentinel partition, so the streaming reads'
-    explicit ``pbatch`` schema + current-partition exclusion keep
-    working (partitioning stays by pbatch — no mixed layout).
     ``exclude_pbatch`` (the in-flight batch when compaction runs
-    inside the ingest loop) is left on its own partition UN-folded:
-    if the job dies after compaction but before the checkpoint
-    commits, the replayed batch still excludes exactly its own prior
-    contribution and re-derives identical verdicts — folding it into
-    the sentinel would double-count its df delta on replay.
-    Batch-layout stores (no pbatch — built by
-    ``build_dedup_lsh_index_capped``) compact as before: df to one
-    row per shingle, bands repartitioned and partitioned by band.
+    inside the ingest loop) stays on its own partition, un-folded: if
+    the job dies after compaction but before the checkpoint commits,
+    the replayed batch still excludes exactly its own prior
+    contribution and re-derives identical verdicts (folding it would
+    double-count its df delta on replay).
 
-    Crash-safe the DimStore way: each store is rewritten to a temp
-    sibling then swapped (rename-away + rename-in), and every
-    entry point (``append``/``probe``/``compact`` and the streaming
-    gate reads) runs the shared ``_repair_swap_dir`` sweep first, so a
-    compaction killed between the two renames rolls back on the next
-    touch instead of leaving the store missing."""
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
-    import os
-
-    from flink_realtime_data_warehouse_spark.fanout import fanout
-
-    for sub, rewrite in (
+    Each store is rewritten through ``FORMAT.swap_rewrite``; every
+    entry point repairs a store before reading it, so a compaction
+    killed mid-swap rolls back on the next touch instead of leaving
+    the store missing."""
+    for sub, fold_rows in (
         ("df", lambda d: d.groupBy("s").agg(F.sum("df").alias("df"))),
-        # fanout, not bare repartition("band"): AQE's byte-based
-        # coalescing could fold the rewrite onto one writer task
-        ("bands", lambda d: fanout(d, "band")),
+        ("bands", lambda d: d.drop("pbatch")),
     ):
-        store = os.path.join(path, sub)
+        store = f"{path}/{sub}"
         FORMAT.repair(path, store)
-        if not FORMAT.has_data(store):
-            continue  # zero-row store: nothing to fold, inference would fail
-        tmp = FORMAT.stage_path(store)
-        if _is_pbatch_layout(store):
-            # explicit schema: a zero-row dynamic-overwrite batch leaves
-            # partition dirs with no data files, which breaks inference
-            src = FORMAT.read(
-                spark, store, f"{_LSH_STORE_SCHEMAS[sub]}, pbatch string"
-            )
-            keep = (
-                src.filter(F.col("pbatch") == exclude_pbatch)
-                if exclude_pbatch is not None
-                else src.limit(0)
-            )
-            fold = (
-                src.filter(~F.col("pbatch").eqNullSafe(exclude_pbatch))
-                if exclude_pbatch is not None
-                else src
-            )
-            folded = (
-                fold.groupBy("s").agg(F.sum("df").alias("df"))
-                if sub == "df"
-                else fold.drop("pbatch")
-            ).withColumn("pbatch", F.lit(COMPACTED_PBATCH))
-            folded.unionByName(keep).write.mode("overwrite").partitionBy(
-                "pbatch"
-            ).parquet(tmp)
-        else:
-            src = FORMAT.read(spark, store, _LSH_STORE_SCHEMAS[sub])
-            w = rewrite(src).write.mode("overwrite")
-            if sub == "bands":
-                w = w.partitionBy("band")
-            w.parquet(tmp)
-        FORMAT.commit_swap(store, tmp)
+        if FORMAT.has_data(store):  # a zero-row store has nothing to fold
+            fold_store(spark, store, _LSH_STORE_SCHEMAS[sub], fold_rows, exclude_pbatch)
 
 
 def probe_dedup_lsh_index_capped(
@@ -1695,30 +1608,14 @@ def probe_dedup_lsh_index_capped(
     """Near-dup candidates of ``new_docs`` against the persisted
     df-capped index: the batch's band rows (capped against stored df +
     batch delta) joined to the stored bands on (band, key). Only the
-    batch's band rows and the tiny hot set move — history text is
+    batch's band rows and the tiny hot set move; history text is
     never read, and under boilerplate the hot-shingle anti-join keeps
     the probe's collision volume bounded where the uncapped probe
     drifts superlinear (SKEW.json)."""
-    from flink_realtime_data_warehouse_spark.streaming.table_format import (
-        FORMAT,
-    )
-
-    for sub in ("df", "bands"):  # roll back a crashed compaction swap
-        FORMAT.repair(path, f"{path}/{sub}")
-    stored = FORMAT.read(spark, f"{path}/df", _LSH_STORE_SCHEMAS["df"])
+    stored = _read_lsh_store(spark, path, "df")
     sh_capped, _ = _capped_batch_shingles(new_docs, stored, cap)
-    probe = _bands_from_shingles(sh_capped)
-    hist = FORMAT.read(spark, f"{path}/bands", _LSH_STORE_SCHEMAS["bands"])
-    return (
-        probe.alias("n")
-        .join(
-            hist.alias("h"),
-            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"), F.col("h.doc_id").alias("doc_hist")
-        )
-        .distinct()
+    return _band_collisions(
+        _bands_from_shingles(sh_capped), _read_lsh_store(spark, path, "bands")
     )
 
 

@@ -22,6 +22,7 @@ from pyspark.sql.types import StructType
 from flink_realtime_data_warehouse_spark.operators.parse import parse_with_dirty
 from flink_realtime_data_warehouse_spark.operators.split import split_log
 from flink_realtime_data_warehouse_spark.schemas import BEHAVIOR_LOG_SCHEMA, TOPIC_DB_SCHEMA
+from flink_realtime_data_warehouse_spark.streaming import pbatch as pb
 from flink_realtime_data_warehouse_spark.streaming.state import (
     correct_is_new,
     daily_unique_visitors,
@@ -568,16 +569,7 @@ def compact_ann_ivf_deltas(
     d = FORMAT.read(
         spark, deltas, "cell int, vec_id bigint, v array<float>, pbatch string"
     )
-    keep = (
-        d.filter(F.col("pbatch") == exclude_pbatch)
-        if exclude_pbatch is not None
-        else d.limit(0)
-    )
-    fold = (
-        d.filter(~F.col("pbatch").eqNullSafe(exclude_pbatch))
-        if exclude_pbatch is not None
-        else d
-    )
+    keep, fold = pb.split_in_flight(d, exclude_pbatch)
     if fold.limit(1).count() == 0:
         return  # nothing to fold — leave both stores untouched
     main = FORMAT.read(
@@ -734,41 +726,16 @@ def compact_history_digest_store(
     consolidated file set instead of one per micro-batch, so the
     per-batch classify join lists O(1) file sets instead of one per
     batch ever ingested (content hashes are unique across partitions
-    by construction — only digest-``new`` rows append — and the
+    by construction, since only digest-``new`` rows append, and the
     ``distinct()`` makes re-compaction idempotent). ``exclude_pbatch``
     (the in-flight batch) stays un-folded so a batch redelivered after
     a post-compaction crash still excludes exactly its own prior
-    digests. Crash-safe via the shared rename-swap +
-    ``_repair_swap_dir`` sweep, which the ingest's digest reads also
-    run before their existence probes."""
-    from flink_realtime_data_warehouse_spark.operators.dedup import (
-        COMPACTED_PBATCH,
-    )
-
+    digests (``streaming/pbatch.py::fold_store``). A swap killed
+    midway is repaired by the next touch of the store."""
     store = os.path.join(out_root, "digests")
     FORMAT.repair(out_root, store)
     if not FORMAT.exists(store):
         return
-    src = FORMAT.read(spark, store, _DIGESTS_SCHEMA)
-    keep = (
-        src.filter(F.col("pbatch") == exclude_pbatch)
-        if exclude_pbatch is not None
-        else src.limit(0)
-    )
-    fold = (
-        src.filter(~F.col("pbatch").eqNullSafe(exclude_pbatch))
-        if exclude_pbatch is not None
-        else src
-    )
-    folded = (
-        fold.select("content_hash")
-        .distinct()
-        .withColumn("pbatch", F.lit(COMPACTED_PBATCH))
-    )
-    tmp = FORMAT.stage_path(store)
-    folded.unionByName(keep).write.mode("overwrite").partitionBy(
-        "pbatch"
-    ).parquet(tmp)
     # bloom watermark maintenance (r9, ADVICE): the fold renames
     # partitions the filter's coverage sidecar tracks by name. When
     # every folded partition was covered, the fold provably adds no
@@ -780,17 +747,21 @@ def compact_history_digest_store(
     bloom_path = os.path.join(out_root, "bloom")
     covered = _bloom_covered(bloom_path)
     if covered is not None:
-        folded_parts = set(FORMAT.list_partitions(store, "pbatch")) - (
-            {exclude_pbatch} if exclude_pbatch is not None else set()
-        )
+        folded_parts = set(FORMAT.list_partitions(store, "pbatch")) - {exclude_pbatch}
         if folded_parts <= covered:
-            new_covered = (covered - folded_parts) | {COMPACTED_PBATCH}
+            new_covered = (covered - folded_parts) | {pb.COMPACTED_PBATCH}
         else:
             new_covered = set()
         FORMAT.write_sidecar(
             bloom_path, "_covered.json", json.dumps(sorted(new_covered))
         )
-    FORMAT.commit_swap(store, tmp)
+    pb.fold_store(
+        spark,
+        store,
+        _DIGESTS_SCHEMA,
+        lambda d: d.select("content_hash").distinct(),
+        exclude_pbatch,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -802,8 +773,6 @@ def compact_history_digest_store(
 #: dynamic-overwrite write creates the store directory with no data
 #: files, and schema inference on it would fail the next batch
 _DIGESTS_SCHEMA = "content_hash string, pbatch string"
-_LSH_DF_SCHEMA = "s bigint, df bigint, pbatch string"
-_LSH_BANDS_SCHEMA = "doc_id bigint, band int, key string, pbatch string"
 #: Bloom rebuild-with-slack factor: OR-updates consume the headroom, then
 #: one rebuild re-sizes — amortized O(1) rebuild work per key
 _BLOOM_HEADROOM = 4
@@ -847,30 +816,14 @@ def _bloom_covered(bloom_path: str) -> set[str] | None:
 
 def _read_history(b: _IngestBatch, store: str, schema: str) -> DataFrame:
     """Committed rows of ``store`` minus the in-flight batch's own
-    partition. A half-finished swap is repaired before the existence
-    probe, so only a store that does not exist yet reads empty. The
-    filter is null-safe: rows of a store compacted out of band
-    (``pbatch`` NULL) stay history."""
-    path = b.path(store)
-    FORMAT.repair(os.path.dirname(path), path)
-    if not FORMAT.exists(path):
-        return b.spark.createDataFrame([], schema)
-    return FORMAT.read(b.spark, path, schema).filter(
-        ~F.col("pbatch").eqNullSafe(b.pbatch)
-    )
+    partition (``streaming/pbatch.py::read_history``)."""
+    return pb.read_history(b.spark, b.path(store), schema, b.pbatch)
 
 
 def _sink(b: _IngestBatch, df: DataFrame, store: str) -> None:
     """Write ``df`` as the batch's ``pbatch`` partition of ``store``; a
-    replay overwrites its own first attempt. The sink relations read
-    persisted parents, whose partitioning AQE leaves alone, so the
-    REBALANCE hint is what sizes the writer by bytes (one file for a
-    tiny batch instead of one per cached partition)."""
-    FORMAT.overwrite_partitions(
-        df.withColumn("pbatch", F.lit(b.pbatch)).hint("rebalance"),
-        b.path(store),
-        "pbatch",
-    )
+    replay overwrites its own first attempt."""
+    pb.write_partition(df, b.path(store), b.pbatch)
 
 
 def _swap_write_bloom(b: _IngestBatch, rows: DataFrame, covered: set[str]) -> None:
@@ -1004,18 +957,21 @@ def _near_dup_gate(b: _IngestBatch, new_docs: DataFrame) -> None:
     """Stage ``gate``: band the new documents with shingles capped at
     the accumulated df (stored deltas plus this batch's), write band
     collisions with stored bands to ``near_dups`` as evidence, and add
-    the batch's bands and df delta to the ``lsh`` stores."""
+    the batch's bands and df delta to the ``lsh`` index as its
+    ``pbatch`` partitions (the capped index's own probe join and
+    store writes, ``operators/dedup.py``)."""
     from flink_realtime_data_warehouse_spark.fanout import fanout
     from flink_realtime_data_warehouse_spark.operators import dedup
 
     b.stage("gate")
+    lsh = b.path("lsh")
     # one persisted shingle relation feeds the df delta, the hot set and
     # the bands; the fan-out runs the explode wide, since a micro-batch
     # is typically one source file and so one scan task
     sh = b.persist(
         dedup._exploded_shingle_hashes(fanout(new_docs, "doc_id")).distinct()
     )
-    stored_df = _read_history(b, "lsh/df", _LSH_DF_SCHEMA)
+    stored_df = dedup._read_lsh_store(b.spark, lsh, "df", b.pbatch)
     sh_capped, delta = dedup._capped_batch_shingles(
         new_docs, stored_df, dedup.NGRAM_DF_CAP, sh=sh
     )
@@ -1023,19 +979,11 @@ def _near_dup_gate(b: _IngestBatch, new_docs: DataFrame) -> None:
     # them runs the minhash aggregation (MINHASH_K = 12 mins per
     # document over its exploded shingles) once per batch
     bands = b.persist(dedup._bands_from_shingles(sh_capped))
-    hist = _read_history(b, "lsh/bands", _LSH_BANDS_SCHEMA)
-    near = (
-        bands.alias("n")
-        .join(
-            hist.alias("h"),
-            (F.col("n.band") == F.col("h.band")) & (F.col("n.key") == F.col("h.key")),
-        )
-        .select(F.col("n.doc_id").alias("doc_id"), F.col("h.doc_id").alias("doc_hist"))
-        .distinct()
+    near = dedup._band_collisions(
+        bands, dedup._read_lsh_store(b.spark, lsh, "bands", b.pbatch)
     )
-    _sink(b, near, "near_dups")
-    _sink(b, bands, "lsh/bands")
-    _sink(b, delta, "lsh/df")
+    _sink(b, near.withColumnRenamed("doc_new", "doc_id"), "near_dups")
+    dedup._write_lsh_batch(lsh, b.pbatch, bands, delta)
 
 
 def _ingest_batch(

@@ -16,14 +16,17 @@ rename-swap/repair transaction machinery because no table-format
 runtime ships in this container. The machinery is fault-injection
 tested, but a production team would replace it — and every store
 mutator that needs replacing funnels through the operations below.
-As of r10 this module is the ONLY place in the package that spells
-any staging/rename discipline (``__tmp_``/``__old_`` for the parquet
+This module is the ONLY place in the package that spells any
+staging/rename discipline (``__tmp_``/``__old_`` for the parquet
 backend, ``__stage_``/manifest commits here): DimStore/DimHistoryStore
-(streaming/sinks.py), the digest/LSH/bloom compaction folds
-(streaming/jobs.py, operators/dedup.py), the rollup store
+(streaming/sinks.py), the ``pbatch`` stores and their folds
+(streaming/pbatch.py: the ingest's digest and ``clean``/``dups``
+sinks, the df-capped LSH index of operators/dedup.py, the IVF delta
+tail), the bloom filter (streaming/jobs.py), the rollup store
 (streaming/rollup.py), file compaction (operators/scale.py), and the
 takedown rewrites (streaming/retention.py) all route through
-``FORMAT``.
+``FORMAT``: a store's rows are written by a ``FORMAT`` call, or into a
+``stage_path`` tree that ``FORMAT`` commits.
 
 Contract for a future ``DeltaTableFormat`` (each method documents its
 Delta mapping):

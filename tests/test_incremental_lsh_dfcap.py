@@ -386,6 +386,35 @@ def test_compaction_preserves_probe_and_collapses_stores(spark, tmp_path):
     assert probe() == before  # repair sweep restored the store
     assert os.path.isdir(df_store)
     assert not os.path.isdir(df_store + "__old_deadbeef")
+    # an append after the same crash on the band store restores it
+    # before adding its partition beside it
+    bands_store = os.path.join(idx, "bands")
+    os.rename(bands_store, bands_store + "__old_deadbeef")
+    append_dedup_lsh_index_capped(extra, idx, cap=CAP)
+    assert probe() == before
+    assert not os.path.isdir(bands_store + "__old_deadbeef")
+
+
+def test_compacted_row_matches_oracle_on_log_manifest(spark):
+    """The capped index writes only through FORMAT, so the persisted
+    compacted row reads back what it built under the manifest backend
+    too (sf0.01, where the oracle has candidates: 4 rows)."""
+    from conftest import SF_CORRECT as sf
+    from oracle_utils import compare_query_to_oracle, run_oracle_df
+
+    from flink_realtime_data_warehouse_spark.plans.loader import load_all
+    from flink_realtime_data_warehouse_spark.streaming.table_format import (
+        set_table_format,
+    )
+
+    name = "dedup_incremental_lsh_dfcap_compacted"
+    queries, oracles = load_all()
+    assert len(run_oracle_df(oracles[name], sf)) > 0
+    set_table_format("log-manifest")
+    try:
+        compare_query_to_oracle(queries[name](spark, sf), oracles[name], sf)
+    finally:
+        set_table_format(None)
 
 
 def test_shingle_cache_stats_observable(spark):

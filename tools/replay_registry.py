@@ -59,6 +59,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from flink_realtime_data_warehouse_spark.plans.loader import load_all
+    from flink_realtime_data_warehouse_spark.streaming.table_format import (
+        get_table_format_name,
+    )
     from oracle_utils import compare_query_to_oracle
 
     queries, oracles = load_all()
@@ -92,6 +95,8 @@ def main() -> int:
     artifact = {
         "round": args.round,
         "sf_dir": args.sf_dir,
+        # the backend the rows' stores ran on (SPARK_GRAFT_TABLE_FORMAT)
+        "table_format": get_table_format_name(),
         "n_queries": len(results),
         "n_ok": n_ok,
         "n_fail": len(results) - n_ok,
