@@ -1300,18 +1300,21 @@ def dedup_minhash_lsh_pairs_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def build_dedup_lsh_index(docs: DataFrame, path: str) -> None:
-    """Materialize the band index for an ingested corpus. Layout:
-    partitioned by band (the probe joins on (band, key); at real scale
-    bucket each band directory by key via operators/scale.py so probes
-    co-locate shuffle-free)."""
-    FORMAT.swap_rewrite(docs.sparkSession, path, band_keys(docs), "band")
+    """Materialize the band index for an ingested corpus, in the
+    ``pbatch`` layout of the capped index's band store: a build swaps
+    in one ``COMPACTED_PBATCH`` partition."""
+    rows = band_keys(docs).withColumn("pbatch", F.lit(COMPACTED_PBATCH))
+    FORMAT.swap_rewrite(docs.sparkSession, path, rows, "pbatch")
 
 
 def append_dedup_lsh_index(new_docs: DataFrame, path: str) -> None:
-    """Incrementally index newly accepted docs: band rows APPEND —
-    existing index files are never rewritten (same economics as the
-    ANN index appends in operators/similarity.py)."""
-    FORMAT.append_partitioned(band_keys(new_docs), path, "band")
+    """Incrementally index newly accepted docs: their band rows land
+    as a fresh ``pbatch`` partition — existing index files are never
+    rewritten (same economics as the ANN index appends in
+    operators/similarity.py)."""
+    import uuid
+
+    write_partition(band_keys(new_docs), path, uuid.uuid4().hex)
 
 
 def probe_dedup_lsh_index(
@@ -1321,7 +1324,8 @@ def probe_dedup_lsh_index(
     distinct (doc_new, doc_hist) sharing >= 1 full band. The probe
     shuffles only the batch's band rows (|batch| x bands) against the
     index join — history text is never read, never shuffled."""
-    return _band_collisions(band_keys(new_docs), FORMAT.read(spark, path))
+    hist = read_history(spark, path, _LSH_STORE_SCHEMAS["bands"])
+    return _band_collisions(band_keys(new_docs), hist)
 
 
 @query("dedup_incremental_lsh", oracle=_INCR_LSH_ORACLE)
@@ -1490,8 +1494,9 @@ def _capped_batch_shingles(
     return sh.join(F.broadcast(hot), "s", "left_anti"), delta
 
 
-#: the capped index's two stores under its root, both partitioned by
-#: ``pbatch`` (``streaming/pbatch.py``)
+#: the LSH index stores, all partitioned by ``pbatch``
+#: (``streaming/pbatch.py``): the capped index's two under its root,
+#: and the uncapped index, one ``bands`` store
 _LSH_STORE_SCHEMAS = {
     "df": "s bigint, df bigint, pbatch string",
     "bands": "doc_id bigint, band int, key string, pbatch string",

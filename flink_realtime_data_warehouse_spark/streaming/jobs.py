@@ -827,15 +827,14 @@ def _sink(b: _IngestBatch, df: DataFrame, store: str) -> None:
 
 
 def _swap_write_bloom(b: _IngestBatch, rows: DataFrame, covered: set[str]) -> None:
-    """Atomically replace the Bloom store with ``rows``. The
-    ``_covered.json`` watermark is written inside the staged tree, so
-    filter bits and watermark commit together."""
-    bloom = b.path("bloom")
-    tmp = FORMAT.stage_path(bloom)
-    rows.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_covered.json"), "w") as f:
-        json.dump(sorted(covered), f)
-    FORMAT.commit_swap(bloom, tmp)
+    """Atomically replace the Bloom store with ``rows``; the
+    ``_covered.json`` watermark commits with the filter bits."""
+    FORMAT.swap_rewrite(
+        b.spark,
+        b.path("bloom"),
+        rows,
+        sidecars={"_covered.json": json.dumps(sorted(covered))},
+    )
 
 
 def _rebuild_bloom(b: _IngestBatch, new_digests: DataFrame | None = None) -> None:

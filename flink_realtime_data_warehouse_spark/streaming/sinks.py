@@ -46,6 +46,34 @@ def _parse_extend(extend: str | None) -> dict[str, str]:
     return out
 
 
+def _load_meta(path: str) -> dict | None:
+    """The ``_dim_meta.json`` layout of the dim table at ``path``, or
+    None when the table does not exist yet. The sidecar commits with
+    the table's first data, so a table without it is an error, never
+    a table to rewrite in silence."""
+    text = FORMAT.read_sidecar(path, "_dim_meta.json")
+    if text is not None:
+        return json.loads(text)
+    if FORMAT.exists(path):
+        raise RuntimeError(f"dim table {path} has no _dim_meta.json")
+    return None
+
+
+def _commit(
+    spark: SparkSession, path: str, rows: DataFrame, touched: list | None, meta: dict
+) -> None:
+    """Commit the ``_pk_part``-partitioned ``rows`` of a dim table: a
+    new table (``touched`` None) in one swap that carries ``meta`` as
+    its ``_dim_meta.json``, an existing one by replacing only its
+    ``touched`` hash partitions."""
+    if touched is None:
+        FORMAT.swap_rewrite(
+            spark, path, rows, "_pk_part", sidecars={"_dim_meta.json": json.dumps(meta)}
+        )
+    else:
+        FORMAT.swap_partitions(spark, path, rows, "_pk_part", touched)
+
+
 class DimStore:
     """Keyed upsert table store rooted at a directory (one subdir per table).
 
@@ -68,33 +96,11 @@ class DimStore:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _load_meta(self, table: str) -> dict | None:
-        # snapshot-scoped sidecar (underscore prefix -> invisible to
-        # Spark's file listing under either backend)
-        text = FORMAT.read_sidecar(self._path(table), "_dim_meta.json")
-        return json.loads(text) if text is not None else None
-
     def exists(self, table: str) -> bool:
         return FORMAT.exists(self._path(table))
 
     def _repair(self, table: str) -> None:
-        """Crash-recovery sweep, run before any read or mutation.
-
-        The partition swap is two renames (dst→old, src→dst) plus a
-        cleanup — atomic only individually, so a process killed inside
-        ``upsert``/``delete`` can leave (a) a partition renamed away to
-        ``_pk_part=N__old_x`` with no replacement in place — without
-        repair the next merge would silently read the table MINUS that
-        partition (real data loss), and Spark would parse the leftover
-        dir as a bogus partition value; (b) a completed swap whose
-        backup dir survived the crash; (c) staging ``__tmp`` /
-        whole-table ``__old`` siblings. Repair rolls (a) back (the
-        batch never committed — the checkpoint replays it in full),
-        deletes (b)'s backup, restores a missing table dir from (c)'s
-        whole-table backup, and drops stale staging dirs. Verified
-        end-to-end by tests/test_fault_injection.py (kill mid-swap →
-        restart → no loss, no dup, untouched partitions
-        byte-identical)."""
+        """Crash-recovery sweep before any read or mutation; see ``table_format._repair_swap_dir``."""
         FORMAT.repair(self.root, self._path(table))
 
     def read(self, table: str) -> DataFrame:
@@ -126,22 +132,22 @@ class DimStore:
         """
         path = self._path(table)
         self._repair(table)
-        exists = self.exists(table)
-        meta = self._load_meta(table)
-        if meta is None:
+        meta = _load_meta(path)
+        create = meta is None
+        if create:  # K4: create-table-if-not-exists
             props = _parse_extend(extend)
             n_parts = int(props.get("SALT_BUCKETS", self.n_partitions))
-        else:
-            props = meta.get("properties", {})
-            n_parts = int(meta["n_partitions"])
-        part_expr = F.pmod(F.xxhash64(F.col(pk)), F.lit(n_parts)).cast("int")
+            meta = {"n_partitions": n_parts, "pk": pk, "properties": props}
+        part_expr = F.pmod(
+            F.xxhash64(F.col(pk)), F.lit(int(meta["n_partitions"]))
+        ).cast("int")
 
         w = Window.partitionBy(pk).orderBy(F.desc("_seq"))
-        batch = batch.withColumn("_seq", F.monotonically_increasing_id())
-        partitioned_merge = exists and meta is not None
-        if partitioned_merge:
+        merged = batch.withColumn("_seq", F.monotonically_increasing_id())
+        touched = None
+        if not create:
             touched = [
-                r[0] for r in batch.select(part_expr.alias("p")).distinct().collect()
+                r[0] for r in merged.select(part_expr.alias("p")).distinct().collect()
             ]
             current = (
                 FORMAT.read(self.spark, path, merge_schema=True)
@@ -149,35 +155,14 @@ class DimStore:
                 .drop("_pk_part")
                 .withColumn("_seq", F.lit(-1).cast("long"))
             )
-            merged = current.unionByName(batch, allowMissingColumns=True)
-        elif exists:  # legacy unpartitioned table: one-time full rewrite
-            current = self.read(table).withColumn("_seq", F.lit(-1).cast("long"))
-            merged = current.unionByName(batch, allowMissingColumns=True)
-        else:  # K4: create-table-if-not-exists
-            merged = batch
+            merged = current.unionByName(merged, allowMissingColumns=True)
         deduped = (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_seq")
             .withColumn("_pk_part", part_expr)
         )
-        # parquet has no txn log: stage touched partitions, then commit
-        # through the table-format seam (per-partition atomic swap for
-        # a partitioned MERGE; whole-table create-or-replace otherwise)
-        tmp = FORMAT.stage_path(path)
-        deduped.write.mode("overwrite").partitionBy("_pk_part").parquet(tmp)
-        if partitioned_merge:
-            FORMAT.merge_staged_partitions(path, tmp, "_pk_part")
-        else:
-            FORMAT.commit_swap(path, tmp)
-        if meta is None:
-            FORMAT.write_sidecar(
-                path,
-                "_dim_meta.json",
-                json.dumps(
-                    {"n_partitions": n_parts, "pk": pk, "properties": props}
-                ),
-            )
+        _commit(self.spark, path, deduped, touched, meta)
 
     def delete(self, table: str, keys: DataFrame) -> int:
         """Right-to-be-forgotten delete: remove rows whose PK appears in
@@ -191,13 +176,13 @@ class DimStore:
         rows deleted. A real deployment swaps the body for Delta/
         Iceberg ``DELETE WHERE`` and keeps the interface.
         """
+        path = self._path(table)
         self._repair(table)
-        meta = self._load_meta(table)
+        meta = _load_meta(path)
         if meta is None:
             return 0
         pk = meta.get("pk", "id")
         n_parts = int(meta["n_partitions"])
-        path = self._path(table)
         key_col = keys.columns[0]
         # hash the key at the STORED pk dtype — upsert partitions by
         # xxhash64 of the native value, and xxhash64('3') != xxhash64(3L):
@@ -216,8 +201,8 @@ class DimStore:
         before = current.count()
         kept = current.join(F.broadcast(key_df), pk, "left_anti")
         after = kept.count()
-        # a partition whose every row was deleted has no stage dir and
-        # is dropped by the seam (replace-named-partitions semantics)
+        # a touched partition whose every row was deleted has no row in
+        # ``kept``, so ``swap_partitions`` drops it
         FORMAT.swap_partitions(self.spark, path, kept, "_pk_part", touched)
         return before - after
 
@@ -381,12 +366,11 @@ class DimHistoryStore:
         """
         path = self._path(table)
         FORMAT.repair(self.root, path)
-        exists = self.exists(table)
-        meta = None
-        if exists:
-            text = FORMAT.read_sidecar(path, "_dim_meta.json")
-            meta = json.loads(text) if text is not None else None
-        n_parts = int(meta["n_partitions"]) if meta else self.n_partitions
+        meta = _load_meta(path)
+        create = meta is None
+        if create:
+            meta = {"n_partitions": self.n_partitions, "pk": pk, "ts_col": ts_col}
+        n_parts = int(meta["n_partitions"])
         part_expr = F.pmod(F.xxhash64(F.col(pk)), F.lit(n_parts)).cast("int")
 
         wv = Window.partitionBy(pk).orderBy(ts_col, "_seq")
@@ -396,7 +380,8 @@ class DimHistoryStore:
             .withColumn("valid_to", F.lead("valid_from").over(wv))
             .drop("_seq")
         )
-        if exists:
+        touched = None
+        if not create:
             first_ts = b.groupBy(pk).agg(F.min("valid_from").alias("_close_ts"))
             touched = [
                 r[0] for r in b.select(part_expr.alias("p")).distinct().collect()
@@ -419,15 +404,4 @@ class DimHistoryStore:
         out = merged.withColumn("is_current", F.col("valid_to").isNull()).withColumn(
             "_pk_part", part_expr
         )
-        tmp = FORMAT.stage_path(path)
-        out.write.mode("overwrite").partitionBy("_pk_part").parquet(tmp)
-        if exists:
-            FORMAT.merge_staged_partitions(path, tmp, "_pk_part")
-        else:
-            FORMAT.commit_swap(path, tmp)
-        if meta is None:
-            FORMAT.write_sidecar(
-                path,
-                "_dim_meta.json",
-                json.dumps({"n_partitions": n_parts, "pk": pk, "ts_col": ts_col}),
-            )
+        _commit(self.spark, path, out, touched, meta)

@@ -21,12 +21,15 @@ staging/rename discipline (``__tmp_``/``__old_`` for the parquet
 backend, ``__stage_``/manifest commits here): DimStore/DimHistoryStore
 (streaming/sinks.py), the ``pbatch`` stores and their folds
 (streaming/pbatch.py: the ingest's digest and ``clean``/``dups``
-sinks, the df-capped LSH index of operators/dedup.py, the IVF delta
-tail), the bloom filter (streaming/jobs.py), the rollup store
+sinks, the LSH indexes of operators/dedup.py, the IVF delta tail), the
+bloom filter (streaming/jobs.py), the rollup store
 (streaming/rollup.py), file compaction (operators/scale.py), and the
 takedown rewrites (streaming/retention.py) all route through
-``FORMAT``: a store's rows are written by a ``FORMAT`` call, or into a
-``stage_path`` tree that ``FORMAT`` commits.
+``FORMAT``: every mutation hands it a DataFrame, and the backend
+decides where the staged tree lives, which top-level files are
+sidecars, and whether a commit merges or replaces. The one tree a
+caller writes itself is the IVF cold build's, which ``commit_swap``
+adopts.
 
 Contract for a future ``DeltaTableFormat`` (each method documents its
 Delta mapping):
@@ -40,24 +43,25 @@ Delta mapping):
                           ``partitionOverwriteMode=dynamic`` (or
                           ``replaceWhere`` on the partition predicate)
  ``append``               ``mode("append")`` — one atomic commit
- ``swap_rewrite``         ``mode("overwrite")`` — one atomic commit
+ ``swap_rewrite``         ``mode("overwrite")`` — one atomic commit.
+                          ``sidecars`` (name -> text) are written into
+                          the staged tree and commit WITH the data
+                          (the bloom filter's ``_covered.json``
+                          watermark, DimStore's ``_dim_meta.json``
+                          layout). Delta: the commit's own txn
+                          metadata.
  ``swap_partitions``      ``replaceWhere`` limited to the named
                           partitions — one atomic commit, cold
-                          partitions' files untouched
- ``stage_path`` +         the two halves of ``swap_rewrite`` for
- ``commit_swap``          callers that must write sidecar artifacts
-                          into the staged tree before the commit
-                          point (the bloom filter's coverage
-                          watermark). Delta: stage into the commit's
-                          own transaction (write + txn metadata).
- ``merge_staged_partitions``  commit ONLY the partitions present in a
-                          staged tree, leaving all others untouched —
-                          the keyed MERGE's write half. Delta:
-                          ``MERGE INTO`` / dynamic overwrite.
- ``replace_staged_partitions``  commit the NAMED partitions from a
-                          staged tree; a named partition absent from
-                          the stage is dropped (all its rows deleted).
-                          Delta: ``replaceWhere "<col> IN (...)"``.
+                          partitions' files untouched; a named
+                          partition absent from the DataFrame is
+                          dropped (the keyed MERGE and the pruned
+                          DELETE)
+ ``commit_swap``          adopt a tree an external builder wrote as
+                          the whole store (the IVF cold build). Delta:
+                          registering the files in one commit.
+ ``read_sidecar`` /       a snapshot's sidecar text / a sidecar-only
+ ``write_sidecar``        commit (the compaction's watermark
+                          carry-over). Delta: txn metadata.
  ``drop_partition`` /     metadata delete of whole partitions (the
  ``sweep_husks``          hypertable ``drop_chunks``). Delta:
                           ``DELETE WHERE <partition predicate>`` — a
@@ -94,12 +98,22 @@ def atomic_write_text(path: str, text: str) -> None:
     rename discipline that is identical under every backend, used for
     markers and sidecars that live BESIDE stores (the IVF
     ``_built_pbatch`` marker, checkpoint incarnation ids). Store-
-    internal sidecars go through ``write_sidecar`` instead so the
-    backend can keep them transactional with the snapshot."""
+    internal sidecars go through ``swap_rewrite``'s ``sidecars`` or
+    ``write_sidecar`` instead, so the backend keeps them
+    transactional with the snapshot."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w", encoding="utf-8") as f:
         f.write(text)
     os.replace(tmp, path)
+
+
+def _write_tree(df: DataFrame, stage: str, part_col=None) -> None:
+    """Write ``df`` as a parquet tree at ``stage``, partitioned by
+    ``part_col`` (None, a column name, or a list of names)."""
+    w = df.write.mode("overwrite")
+    if part_col:
+        w = w.partitionBy(*([part_col] if isinstance(part_col, str) else part_col))
+    w.parquet(stage)
 
 
 def _repair_swap_dir(root: str, path: str) -> None:
@@ -190,26 +204,19 @@ class ParquetSwapFormat:
         Delta: ``mode("append")``."""
         df.write.mode("append").parquet(path)
 
-    def append_partitioned(self, df: DataFrame, path: str, part_col) -> None:
-        """Append rows INTO their partitions (the LSH band stores'
-        per-batch growth): files accumulate per partition dir; nothing
-        is replaced. Delta: ``mode("append")`` on a partitioned
-        table."""
-        cols = [part_col] if isinstance(part_col, str) else list(part_col)
-        df.write.mode("append").partitionBy(*cols).parquet(path)
+    # -- staged commits -----------------------------------------------------
 
-    # -- staging primitives -------------------------------------------------
-
-    def stage_path(self, path: str) -> str:
-        """Mint the staging sibling for a swap of ``path``. The name
-        carries the ``__tmp_`` marker ``repair`` recognizes, so a
-        crash that abandons the stage is swept on the next touch.
-        Delta: no analogue — writes stage inside the commit itself."""
+    def _stage_path(self, path: str) -> str:
+        """The staging sibling for a swap of ``path``. The name carries
+        the ``__tmp_`` marker ``repair`` recognizes, so a crash that
+        abandons the stage is swept on the next touch."""
         return f"{path}__tmp_{uuid.uuid4().hex[:8]}"
 
     def commit_swap(self, path: str, stage: str) -> None:
         """Atomically make a fully-written ``stage`` tree become
-        ``path`` (create-or-replace). Parquet: rename-away + rename-in
+        ``path`` (create-or-replace): ``swap_rewrite``'s commit, and
+        the IVF cold build's adoption of the tree
+        ``build_ann_ivf_index`` wrote. Parquet: rename-away + rename-in
         (a kill between the two leaves a ``__old_`` backup ``repair``
         restores). Delta: the ``mode("overwrite")`` commit."""
         if os.path.isdir(path):
@@ -220,71 +227,26 @@ class ParquetSwapFormat:
         else:
             os.rename(stage, path)
 
-    def merge_staged_partitions(
-        self, path: str, stage: str, part_col: str
-    ) -> None:
-        """Commit every ``part_col=`` partition present in ``stage``
-        into ``path``, leaving partitions absent from the stage
-        untouched — the write half of the keyed MERGE (DimStore) and
-        SCD-2 apply. Each partition flips atomically at its rename; a
-        kill mid-loop leaves some swapped and some half-swapped, and
-        ``repair`` + checkpoint replay converge. Delta: ``MERGE INTO``
-        (one atomic commit — the mid-loop window vanishes)."""
-        prefix = f"{part_col}="
-        for d in os.listdir(stage):
-            if not d.startswith(prefix):
-                continue
-            src, dst = os.path.join(stage, d), os.path.join(path, d)
-            if os.path.isdir(dst):
-                old = f"{dst}__old_{uuid.uuid4().hex[:8]}"
-                os.rename(dst, old)
-                os.rename(src, dst)
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.rename(src, dst)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    def replace_staged_partitions(
-        self, path: str, stage: str, part_col: str, parts: list
-    ) -> None:
-        """Commit the NAMED partitions from ``stage`` into ``path``; a
-        named partition with no stage dir is dropped (its every row
-        was deleted). The partition-pruned DELETE/takedown write half.
-        Delta: ``replaceWhere "<part_col> IN (...)"`` — one commit."""
-        for p in parts:
-            pdir = os.path.join(path, f"{part_col}={p}")
-            sdir = os.path.join(stage, f"{part_col}={p}")
-            old = f"{pdir}__old_{uuid.uuid4().hex[:8]}"
-            if os.path.isdir(pdir):
-                os.rename(pdir, old)
-            if os.path.isdir(sdir):
-                os.rename(sdir, pdir)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
     def swap_rewrite(
         self,
         spark: SparkSession,
         path: str,
         df: DataFrame,
         part_col=None,
+        sidecars: dict[str, str] | None = None,
     ) -> None:
-        """Replace the WHOLE store with ``df`` atomically (compaction
-        folds, the exotic-partition-value fallback). ``part_col``:
-        None (unpartitioned), a column name, or a list of names.
-        NOTE (r10 change, pinned r11): the default was ``"pbatch"``
-        through r9 and is now ``None`` — a caller that relied on the
-        old default must pass ``part_col="pbatch"`` explicitly or its
-        store is rewritten unpartitioned (every in-repo caller passes
-        it; tests/test_table_format.py exercises the unpartitioned
-        default against a store created partitioned).
+        """Replace the WHOLE store with ``df`` atomically (table
+        creates, compaction folds, filter swaps). ``part_col``: None
+        (unpartitioned), a column name, or a list of names. Each
+        ``sidecars`` entry (a top-level ``_``-prefixed name and its
+        text) is written into the staged tree, so it commits with the
+        data; a swap without ``sidecars`` leaves the store none.
         Delta: plain ``mode("overwrite")`` — one commit."""
-        stage = self.stage_path(path)
-        w = df.write.mode("overwrite")
-        if part_col:
-            cols = [part_col] if isinstance(part_col, str) else list(part_col)
-            w = w.partitionBy(*cols)
-        w.parquet(stage)
+        stage = self._stage_path(path)
+        _write_tree(df, stage, part_col)
+        for name, text in (sidecars or {}).items():
+            with open(os.path.join(stage, name), "w", encoding="utf-8") as f:
+                f.write(text)
         self.commit_swap(path, stage)
 
     def swap_partitions(
@@ -296,13 +258,25 @@ class ParquetSwapFormat:
         parts: list,
     ) -> None:
         """Replace ONLY the named partitions with ``df``'s rows (the
-        pruned takedown rewrite): every other partition's files are
-        never opened. ``df`` must contain rows solely for ``parts``
-        (a partition absent from ``df`` is deleted — all-rows-purged).
-        Delta: ``replaceWhere "<part_col> IN (...)"``."""
-        stage = self.stage_path(path)
-        df.write.mode("overwrite").partitionBy(part_col).parquet(stage)
-        self.replace_staged_partitions(path, stage, part_col, parts)
+        keyed MERGE, the pruned takedown rewrite): every other
+        partition's files are never opened. ``df`` must contain rows
+        solely for ``parts`` (a partition absent from ``df`` is
+        deleted — all-rows-purged). Each partition flips atomically at
+        its rename; a kill mid-loop leaves some swapped and one
+        half-swapped, and ``repair`` + checkpoint replay converge.
+        Delta: ``replaceWhere "<part_col> IN (...)"`` — one commit."""
+        stage = self._stage_path(path)
+        _write_tree(df, stage, part_col)
+        for p in parts:
+            pdir = os.path.join(path, f"{part_col}={p}")
+            sdir = os.path.join(stage, f"{part_col}={p}")
+            old = f"{pdir}__old_{uuid.uuid4().hex[:8]}"
+            if os.path.isdir(pdir):
+                os.rename(pdir, old)
+            if os.path.isdir(sdir):
+                os.rename(sdir, pdir)
+            shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
 
     # -- partition metadata operations --------------------------------------
 
@@ -380,11 +354,11 @@ class ParquetSwapFormat:
     def read_sidecar(self, path: str, name: str) -> str | None:
         """Text of the snapshot-scoped sidecar artifact ``name`` (the
         bloom filter's ``_covered.json`` coverage watermark), or None
-        when the store carries none. Sidecars enter the store inside a
-        staged tree (any top-level ``_``/``.``-prefixed file — Spark
-        ignores those when reading data) and commit WITH the snapshot,
-        so data and sidecar can never be observed out of sync. Delta:
-        commit metadata / a txn-tracked object."""
+        when the store carries none. Sidecars enter the store through
+        ``swap_rewrite(..., sidecars=...)`` (top-level ``_``-prefixed
+        files — Spark ignores those when reading data) and commit WITH
+        the snapshot, so data and sidecar can never be observed out of
+        sync. Delta: commit metadata / a txn-tracked object."""
         p = os.path.join(path, name)
         if not os.path.isfile(p):
             return None
@@ -448,10 +422,10 @@ class LogManifestFormat:
     Semantic deltas vs the parquet rename-swap backend (recorded in
     BASELINE.md):
 
-    - ``merge_staged_partitions`` / ``replace_staged_partitions``
-      commit ALL partitions in one manifest replace — the parquet
-      backend's partition-at-a-time crash window (half-swapped store
-      repaired + replayed) does not exist here.
+    - ``swap_partitions`` commits ALL named partitions in one
+      manifest replace — the parquet backend's partition-at-a-time
+      crash window (half-swapped store repaired + replayed) does not
+      exist here.
     - ``drop_partition`` is a pure log entry; it returns ``None``
       (there is no husk for the caller to delete — data files are
       reclaimed by ``sweep_husks``). Callers treat a ``None`` husk as
@@ -572,14 +546,13 @@ class LogManifestFormat:
         return seg
 
     def _merge_from_stage(
-        self, path, stage, replace_all, named_parts=None, part_col=None,
-        append_parts=False,
+        self, path, stage, replace_all, named_parts=None, part_col=None
     ) -> None:
-        """Shared commit body for swap/merge/replace/append: adopt the
-        stage as a segment, then publish ONE manifest describing the
-        new snapshot. Partition values map to LISTS of segment leaves
-        (one per un-compacted append — the Iceberg file-list shape);
-        replace sets the list, ``append_parts`` extends it."""
+        """Shared commit body of every write: adopt the stage as a
+        segment, then publish ONE manifest describing the new
+        snapshot. Partition values map to lists of segment leaves (the
+        Iceberg file-list shape); a commit sets each leaf it writes to
+        its one new location."""
         seg = self._adopt_stage(path, stage)
         segdir = os.path.join(path, seg)
         cols, leaves, sides, has_files = self._scan_stage(segdir)
@@ -607,10 +580,7 @@ class LogManifestFormat:
                     if lf.split("/", 1)[0] not in named
                 }
             for lf in leaves:
-                if append_parts:
-                    m["partitions"].setdefault(lf, []).append(f"{seg}/{lf}")
-                else:
-                    m["partitions"][lf] = [f"{seg}/{lf}"]
+                m["partitions"][lf] = [f"{seg}/{lf}"]
             if has_files:
                 m["segments"].append(seg)
             for s in sides:
@@ -722,24 +692,16 @@ class LogManifestFormat:
         return df
 
     def overwrite_partitions(self, df: DataFrame, path: str, part_col) -> None:
-        cols = [part_col] if isinstance(part_col, str) else list(part_col)
-        stage = self.stage_path(path)
-        df.write.mode("overwrite").partitionBy(*cols).parquet(stage)
+        stage = self._stage_path(path)
+        _write_tree(df, stage, part_col)
         self._merge_from_stage(path, stage, replace_all=False)
 
     def append(self, df: DataFrame, path: str) -> None:
-        stage = self.stage_path(path)
-        df.write.mode("overwrite").parquet(stage)
+        stage = self._stage_path(path)
+        _write_tree(df, stage)
         self._merge_from_stage(path, stage, replace_all=False)
 
-    def append_partitioned(self, df: DataFrame, path: str, part_col) -> None:
-        cols = [part_col] if isinstance(part_col, str) else list(part_col)
-        stage = self.stage_path(path)
-        df.write.mode("overwrite").partitionBy(*cols).parquet(stage)
-        self._merge_from_stage(path, stage, replace_all=False,
-                               append_parts=True)
-
-    def stage_path(self, path: str) -> str:
+    def _stage_path(self, path: str) -> str:
         """Staging sibling (outside the store — the store directory is
         only ever created by a commit, so ``exists`` can't observe a
         half-created store)."""
@@ -748,30 +710,16 @@ class LogManifestFormat:
     def commit_swap(self, path: str, stage: str) -> None:
         self._merge_from_stage(path, stage, replace_all=True)
 
-    def merge_staged_partitions(self, path, stage, part_col) -> None:
-        self._merge_from_stage(path, stage, replace_all=False)
+    # one body for both backends: stage, sidecars into the stage, commit
+    swap_rewrite = ParquetSwapFormat.swap_rewrite
 
-    def replace_staged_partitions(self, path, stage, part_col, parts) -> None:
+    def swap_partitions(self, spark, path, df, part_col, parts) -> None:
+        stage = self._stage_path(path)
+        _write_tree(df, stage, part_col)
         self._merge_from_stage(
             path, stage, replace_all=False,
             named_parts=list(parts), part_col=part_col,
         )
-
-    def swap_rewrite(
-        self, spark: SparkSession, path: str, df: DataFrame, part_col=None
-    ) -> None:
-        stage = self.stage_path(path)
-        w = df.write.mode("overwrite")
-        if part_col:
-            cols = [part_col] if isinstance(part_col, str) else list(part_col)
-            w = w.partitionBy(*cols)
-        w.parquet(stage)
-        self.commit_swap(path, stage)
-
-    def swap_partitions(self, spark, path, df, part_col, parts) -> None:
-        stage = self.stage_path(path)
-        df.write.mode("overwrite").partitionBy(part_col).parquet(stage)
-        self.replace_staged_partitions(path, stage, part_col, parts)
 
     def drop_partition(
         self, path: str, part_dir: str,

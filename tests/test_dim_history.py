@@ -25,37 +25,40 @@ def _hist(store, table="dim_user"):
     }
 
 
-def test_scd2_intervals_chain_across_batches(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    st.apply("dim_user", _batch(spark, [("u1", "Ann", 100), ("u2", "Bo", 100)]))
-    st.apply("dim_user", _batch(spark, [("u1", "Anne", 200)]))
-    h = _hist(st)
-    assert h[("u1", 100)] == (200, False, "Ann")  # closed at the update ts
-    assert h[("u1", 200)] == (None, True, "Anne")
-    assert h[("u2", 100)] == (None, True, "Bo")  # untouched PK stays open
+def test_scd2_intervals_chain_across_batches(spark, tmp_path, table_formats):
+    for backend in table_formats:
+        st = _store(spark, tmp_path / backend)
+        st.apply("dim_user", _batch(spark, [("u1", "Ann", 100), ("u2", "Bo", 100)]))
+        st.apply("dim_user", _batch(spark, [("u1", "Anne", 200)]))
+        h = _hist(st)
+        assert h[("u1", 100)] == (200, False, "Ann")  # closed at the update ts
+        assert h[("u1", 200)] == (None, True, "Anne")
+        assert h[("u2", 100)] == (None, True, "Bo")  # untouched PK stays open
 
 
-def test_scd2_multiple_versions_in_one_batch_chain(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    st.apply("dim_user", _batch(spark, [("u1", "A", 10), ("u1", "B", 20), ("u1", "C", 30)]))
-    h = _hist(st)
-    assert h[("u1", 10)] == (20, False, "A")
-    assert h[("u1", 20)] == (30, False, "B")
-    assert h[("u1", 30)] == (None, True, "C")
+def test_scd2_multiple_versions_in_one_batch_chain(spark, tmp_path, table_formats):
+    for backend in table_formats:
+        st = _store(spark, tmp_path / backend)
+        st.apply("dim_user", _batch(spark, [("u1", "A", 10), ("u1", "B", 20), ("u1", "C", 30)]))
+        h = _hist(st)
+        assert h[("u1", 10)] == (20, False, "A")
+        assert h[("u1", 20)] == (30, False, "B")
+        assert h[("u1", 30)] == (None, True, "C")
 
 
-def test_scd2_time_travel_and_current_view(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    st.apply("dim_user", _batch(spark, [("u1", "Ann", 100), ("u2", "Bo", 100)]))
-    st.apply("dim_user", _batch(spark, [("u1", "Anne", 200), ("u2", "Bob", 300)]))
-    asof_150 = {r["id"]: r["name"] for r in st.as_of("dim_user", 150).collect()}
-    assert asof_150 == {"u1": "Ann", "u2": "Bo"}
-    asof_250 = {r["id"]: r["name"] for r in st.as_of("dim_user", 250).collect()}
-    assert asof_250 == {"u1": "Anne", "u2": "Bo"}
-    cur = {r["id"]: r["name"] for r in st.current("dim_user").collect()}
-    assert cur == {"u1": "Anne", "u2": "Bob"}
-    # before any version existed: empty dimension
-    assert st.as_of("dim_user", 50).count() == 0
+def test_scd2_time_travel_and_current_view(spark, tmp_path, table_formats):
+    for backend in table_formats:
+        st = _store(spark, tmp_path / backend)
+        st.apply("dim_user", _batch(spark, [("u1", "Ann", 100), ("u2", "Bo", 100)]))
+        st.apply("dim_user", _batch(spark, [("u1", "Anne", 200), ("u2", "Bob", 300)]))
+        asof_150 = {r["id"]: r["name"] for r in st.as_of("dim_user", 150).collect()}
+        assert asof_150 == {"u1": "Ann", "u2": "Bo"}
+        asof_250 = {r["id"]: r["name"] for r in st.as_of("dim_user", 250).collect()}
+        assert asof_250 == {"u1": "Anne", "u2": "Bo"}
+        cur = {r["id"]: r["name"] for r in st.current("dim_user").collect()}
+        assert cur == {"u1": "Anne", "u2": "Bob"}
+        # before any version existed: empty dimension
+        assert st.as_of("dim_user", 50).count() == 0
 
 
 def test_scd2_untouched_partitions_not_rewritten(spark, tmp_path):

@@ -1,6 +1,7 @@
 """DIM layer: config-driven routing (J1/T5/ST5), upsert store (K3/K4),
 dynamic DDL, and the end-to-end DimApp streaming topology."""
 
+import contextlib
 import json
 import os
 
@@ -49,14 +50,39 @@ def _config_df(spark):
     return spark.createDataFrame(CONFIG_ROWS, TABLE_PROCESS_SCHEMA)
 
 
-def test_dim_store_upsert_merge(spark, tmp_path):
-    store = DimStore(spark, str(tmp_path / "dim"))
-    df1 = spark.createDataFrame([("1", "apple"), ("2", "banana")], ["id", "tm_name"])
-    store.upsert("dim_base_trademark", df1)  # K4: creates table
-    df2 = spark.createDataFrame([("2", "blueberry"), ("3", "cherry")], ["id", "tm_name"])
-    store.upsert("dim_base_trademark", df2)  # K3: update + insert
-    got = {r["id"]: r["tm_name"] for r in store.read("dim_base_trademark").collect()}
-    assert got == {"1": "apple", "2": "blueberry", "3": "cherry"}
+def test_dim_store_upsert_merge(spark, tmp_path, table_formats):
+    for backend in table_formats:
+        store = DimStore(spark, str(tmp_path / backend))
+        df1 = spark.createDataFrame([("1", "apple"), ("2", "banana")], ["id", "tm_name"])
+        store.upsert("dim_base_trademark", df1)  # K4: creates table
+        df2 = spark.createDataFrame([("2", "blueberry"), ("3", "cherry")], ["id", "tm_name"])
+        store.upsert("dim_base_trademark", df2)  # K3: update + insert
+        got = {r["id"]: r["tm_name"] for r in store.read("dim_base_trademark").collect()}
+        assert got == {"1": "apple", "2": "blueberry", "3": "cherry"}, backend
+
+
+def test_dim_store_create_commits_meta_with_data(spark, tmp_path, monkeypatch, table_formats):
+    """A table's first upsert commits its ``_dim_meta.json`` with its
+    data: a failing sidecar-only write cannot leave a table without
+    its layout, on which an erasure would find nothing to delete."""
+    from flink_realtime_data_warehouse_spark.streaming import table_format
+
+    def fail(*_a, **_k):
+        raise RuntimeError("injected sidecar write failure")
+
+    for backend in table_formats:
+        store = DimStore(spark, str(tmp_path / backend), n_partitions=4)
+        path = str(tmp_path / backend / "dim_t")
+        with monkeypatch.context() as m:
+            m.setattr(type(table_format._active()), "write_sidecar", fail)
+            with contextlib.suppress(RuntimeError):
+                store.upsert(
+                    "dim_t", spark.createDataFrame([("1", "a"), ("2", "b")], ["id", "name"])
+                )
+        if table_format.FORMAT.exists(path):
+            assert table_format.FORMAT.read_sidecar(path, "_dim_meta.json") is not None, backend
+        assert store.delete("dim_t", spark.createDataFrame([("1",)], ["id"])) == 1, backend
+        assert sorted(r["id"] for r in store.read("dim_t").collect()) == ["2"], backend
 
 
 def test_idempotent_produce_keys_deterministic(spark):
@@ -118,19 +144,22 @@ def test_dim_store_partitioned_merge_leaves_untouched_files(spark, tmp_path):
     assert got["3"] == "updated" and got["4"] == "name_4" and len(got) == 64
 
 
-def test_dim_store_sink_extend_salt_buckets(spark, tmp_path):
+def test_dim_store_sink_extend_salt_buckets(spark, tmp_path, table_formats):
     """sink_extend (reference TableProcessFunction.java:59-79 appends it
     to the DDL) must drive the created table's layout."""
-    store = DimStore(spark, str(tmp_path / "dim"), n_partitions=16)
-    df = spark.createDataFrame([(str(i), f"n{i}") for i in range(40)], ["id", "name"])
-    store.upsert("dim_salted", df, extend="SALT_BUCKETS = 4")
-    parts = {d.name for d in (tmp_path / "dim" / "dim_salted").glob("_pk_part=*")}
-    assert parts and parts <= {f"_pk_part={i}" for i in range(4)}
-    # layout persisted: a later upsert without extend keeps 4 buckets
-    store.upsert("dim_salted", spark.createDataFrame([("99", "x")], ["id", "name"]))
-    parts2 = {d.name for d in (tmp_path / "dim" / "dim_salted").glob("_pk_part=*")}
-    assert parts2 <= {f"_pk_part={i}" for i in range(4)}
-    assert store.read("dim_salted").count() == 41
+    from flink_realtime_data_warehouse_spark.streaming.table_format import FORMAT
+
+    for backend in table_formats:
+        store = DimStore(spark, str(tmp_path / backend), n_partitions=16)
+        path = str(tmp_path / backend / "dim_salted")
+        df = spark.createDataFrame([(str(i), f"n{i}") for i in range(40)], ["id", "name"])
+        store.upsert("dim_salted", df, extend="SALT_BUCKETS = 4")
+        parts = set(FORMAT.list_partitions(path, "_pk_part"))
+        assert parts and parts <= {str(i) for i in range(4)}, backend
+        # layout persisted: a later upsert without extend keeps 4 buckets
+        store.upsert("dim_salted", spark.createDataFrame([("99", "x")], ["id", "name"]))
+        assert set(FORMAT.list_partitions(path, "_pk_part")) <= {str(i) for i in range(4)}
+        assert store.read("dim_salted").count() == 41, backend
 
 
 def test_route_changelog_batch(spark, tmp_path):
@@ -252,24 +281,25 @@ def test_dim_app_stream_with_config_refresh(spark, tmp_path):
     assert [(r["id"], r["activity_name"]) for r in act] == [("5", "12.12")]
 
 
-def test_dim_store_schema_evolution(spark, tmp_path):
+def test_dim_store_schema_evolution(spark, tmp_path, table_formats):
     """A batch adding a new column widens the table; a batch missing an
     old column leaves nulls — MERGE semantics under evolving config
     whitelists (sink_columns can change between micro-batches)."""
-    store = DimStore(spark, str(tmp_path / "dim"))
-    store.upsert("dim_e", spark.createDataFrame([("1", "a")], ["id", "name"]))
-    # batch 2 carries an extra column
-    store.upsert(
-        "dim_e",
-        spark.createDataFrame([("2", "b", "x.png")], ["id", "name", "logo_url"]),
-    )
-    got = {r["id"]: (r["name"], r["logo_url"]) for r in store.read("dim_e").collect()}
-    assert got == {"1": ("a", None), "2": ("b", "x.png")}
-    # batch 3 misses the extra column but updates row 2
-    store.upsert("dim_e", spark.createDataFrame([("2", "b2")], ["id", "name"]))
-    got = {r["id"]: (r["name"], r["logo_url"]) for r in store.read("dim_e").collect()}
-    assert got["2"] == ("b2", None)
-    assert got["1"] == ("a", None)
+    for backend in table_formats:
+        store = DimStore(spark, str(tmp_path / backend))
+        store.upsert("dim_e", spark.createDataFrame([("1", "a")], ["id", "name"]))
+        # batch 2 carries an extra column
+        store.upsert(
+            "dim_e",
+            spark.createDataFrame([("2", "b", "x.png")], ["id", "name", "logo_url"]),
+        )
+        got = {r["id"]: (r["name"], r["logo_url"]) for r in store.read("dim_e").collect()}
+        assert got == {"1": ("a", None), "2": ("b", "x.png")}
+        # batch 3 misses the extra column but updates row 2
+        store.upsert("dim_e", spark.createDataFrame([("2", "b2")], ["id", "name"]))
+        got = {r["id"]: (r["name"], r["logo_url"]) for r in store.read("dim_e").collect()}
+        assert got["2"] == ("b2", None)
+        assert got["1"] == ("a", None)
 
 
 def test_dim_store_delete_touched_partitions_only(spark, tmp_path):
@@ -316,25 +346,26 @@ def test_dim_store_delete_touched_partitions_only(spark, tmp_path):
     assert store.delete("no_such_table", keys) == 0
 
 
-def test_dim_store_delete_non_string_pk(spark, tmp_path):
+def test_dim_store_delete_non_string_pk(spark, tmp_path, table_formats):
     """Erasure on a BIGINT-PK table: upsert partitions by the native
     key's xxhash64, so delete must hash at the stored dtype — and must
     work whether the erasure request arrives typed or as strings."""
-    store = DimStore(spark, str(tmp_path / "dim"), n_partitions=8)
-    seed = spark.createDataFrame(
-        [(i, f"name_{i}") for i in range(64)], "id bigint, tm_name string"
-    )
-    store.upsert("dim_n", seed)
+    for backend in table_formats:
+        store = DimStore(spark, str(tmp_path / backend), n_partitions=8)
+        seed = spark.createDataFrame(
+            [(i, f"name_{i}") for i in range(64)], "id bigint, tm_name string"
+        )
+        store.upsert("dim_n", seed)
 
-    # native-typed keys
-    assert store.delete(
-        "dim_n", spark.createDataFrame([(3,), (17,)], "id bigint")
-    ) == 2
-    got = {r["id"] for r in store.read("dim_n").collect()}
-    assert 3 not in got and 17 not in got and len(got) == 62
+        # native-typed keys
+        assert store.delete(
+            "dim_n", spark.createDataFrame([(3,), (17,)], "id bigint")
+        ) == 2
+        got = {r["id"] for r in store.read("dim_n").collect()}
+        assert 3 not in got and 17 not in got and len(got) == 62
 
-    # string keys against the bigint table: cast to the stored dtype
-    assert store.delete(
-        "dim_n", spark.createDataFrame([("25",)], "id string")
-    ) == 1
-    assert 25 not in {r["id"] for r in store.read("dim_n").collect()}
+        # string keys against the bigint table: cast to the stored dtype
+        assert store.delete(
+            "dim_n", spark.createDataFrame([("25",)], "id string")
+        ) == 1
+        assert 25 not in {r["id"] for r in store.read("dim_n").collect()}

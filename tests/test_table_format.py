@@ -128,38 +128,59 @@ def test_append_and_empty_store_read(fmt, spark, tmp_path):
     assert fmt.read(spark, empty, _SCHEMA).count() == 0
 
 
-def test_stage_commit_swap_with_sidecar(fmt, spark, tmp_path):
-    """The bloom-store pattern: data + sidecar written into ONE staged
-    tree, both visible exactly at the commit (never out of sync)."""
+def _kill_commit(_backend, _path, _stage):
+    raise RuntimeError("injected kill before the commit")
+
+
+def test_swap_rewrite_commits_sidecars(fmt, spark, tmp_path, monkeypatch):
+    """The bloom-store and dim-create pattern: data and sidecars commit
+    in ONE swap, so they are never observed out of sync."""
     store = str(tmp_path / "bloom")
-    stage = fmt.stage_path(store)
-    _mk(spark, [(1, "bits", "p0")]).write.mode("overwrite").parquet(stage)
-    with open(os.path.join(stage, "_covered.json"), "w") as f:
-        json.dump(["p0"], f)
+    with monkeypatch.context() as m:
+        m.setattr(type(table_format._active()), "commit_swap", _kill_commit)
+        with pytest.raises(RuntimeError, match="injected"):
+            fmt.swap_rewrite(
+                spark,
+                store,
+                _mk(spark, [(1, "bits", "p0")]),
+                sidecars={"_covered.json": json.dumps(["p0"])},
+            )
     assert not fmt.exists(store)  # staged, not committed
-    fmt.commit_swap(store, stage)
+    assert fmt.read_sidecar(store, "_covered.json") is None
+    fmt.swap_rewrite(
+        spark,
+        store,
+        _mk(spark, [(1, "bits", "p0")]),
+        sidecars={"_covered.json": json.dumps(["p0"])},
+    )
     assert fmt.exists(store)
     assert _rows(spark, store) == [(1, "bits", "p0")]
     assert json.loads(fmt.read_sidecar(store, "_covered.json")) == ["p0"]
-    # a second swap whose stage carries a NEW sidecar replaces both
-    stage2 = fmt.stage_path(store)
-    _mk(spark, [(2, "bits2", "p0")]).write.mode("overwrite").parquet(stage2)
-    with open(os.path.join(stage2, "_covered.json"), "w") as f:
-        json.dump(["p0", "p1"], f)
-    fmt.commit_swap(store, stage2)
+    # a second swap carrying a NEW sidecar replaces both
+    fmt.swap_rewrite(
+        spark,
+        store,
+        _mk(spark, [(2, "bits2", "p0")]),
+        sidecars={"_covered.json": json.dumps(["p0", "p1"])},
+    )
     assert _rows(spark, store) == [(2, "bits2", "p0")]
     assert json.loads(fmt.read_sidecar(store, "_covered.json")) == ["p0", "p1"]
+    # a swap without sidecars leaves the store none
+    fmt.swap_rewrite(spark, store, _mk(spark, [(3, "bits3", "p0")]))
+    assert _rows(spark, store) == [(3, "bits3", "p0")]
+    assert fmt.read_sidecar(store, "_covered.json") is None
 
 
 def test_write_sidecar_in_place(fmt, spark, tmp_path):
     """The compaction's watermark carry-over: replace the sidecar on a
     committed store without rewriting data."""
     store = str(tmp_path / "bloom")
-    stage = fmt.stage_path(store)
-    _mk(spark, [(1, "bits", "p0")]).write.mode("overwrite").parquet(stage)
-    with open(os.path.join(stage, "_covered.json"), "w") as f:
-        json.dump(["p0"], f)
-    fmt.commit_swap(store, stage)
+    fmt.swap_rewrite(
+        spark,
+        store,
+        _mk(spark, [(1, "bits", "p0")]),
+        sidecars={"_covered.json": json.dumps(["p0"])},
+    )
     data_before = _rows(spark, store)
     fmt.write_sidecar(store, "_covered.json", json.dumps(["__compacted__"]))
     assert json.loads(fmt.read_sidecar(store, "_covered.json")) == [
@@ -171,41 +192,28 @@ def test_write_sidecar_in_place(fmt, spark, tmp_path):
 
 
 def test_merge_staged_partitions_keeps_cold(fmt, spark, tmp_path):
-    """The DimStore MERGE write half: partitions in the stage replace
-    their on-store counterparts; absent partitions are untouched."""
+    """The DimStore MERGE write half: named partitions in the data
+    replace their on-store counterparts, a named partition new to the
+    store is added, and unnamed partitions are untouched."""
     store = str(tmp_path / "dim")
     fmt.overwrite_partitions(
         _mk(spark, [(1, "a", "p0"), (2, "b", "p1")]), store, "pbatch"
     )
     cold = {k: v for k, v in _stamp(store).items() if "pbatch=p0" in k}
-    stage = fmt.stage_path(store)
-    _mk(spark, [(20, "B", "p1"), (30, "C", "p2")]).write.mode(
-        "overwrite"
-    ).partitionBy("pbatch").parquet(stage)
-    fmt.merge_staged_partitions(store, stage, "pbatch")
+    fmt.swap_partitions(
+        spark,
+        store,
+        _mk(spark, [(20, "B", "p1"), (30, "C", "p2")]),
+        "pbatch",
+        ["p1", "p2"],
+    )
     assert {k: v for k, v in _stamp(store).items() if "pbatch=p0" in k} == cold
     assert _rows(spark, store) == [
         (1, "a", "p0"),
         (20, "B", "p1"),
         (30, "C", "p2"),
     ]
-
-
-def test_replace_staged_partitions_drops_named_absent(fmt, spark, tmp_path):
-    """The pruned-DELETE write half: a NAMED partition with no stage
-    dir is dropped wholesale; unnamed partitions never move."""
-    store = str(tmp_path / "t")
-    fmt.overwrite_partitions(
-        _mk(spark, [(1, "a", "p0"), (2, "b", "p1"), (3, "c", "p2")]),
-        store,
-        "pbatch",
-    )
-    stage = fmt.stage_path(store)
-    _mk(spark, [(20, "B", "p1")]).write.mode("overwrite").partitionBy(
-        "pbatch"
-    ).parquet(stage)
-    fmt.replace_staged_partitions(store, stage, "pbatch", ["p1", "p2"])
-    assert _rows(spark, store) == [(1, "a", "p0"), (20, "B", "p1")]
+    assert fmt.list_partitions(store, "pbatch") == ["p0", "p1", "p2"]
 
 
 def test_drop_partition_and_sweep(fmt, spark, tmp_path):
@@ -243,16 +251,18 @@ def test_exists_and_has_data(fmt, spark, tmp_path):
     assert fmt.has_data(store)
 
 
-def test_list_partitions_excludes_inflight(fmt, spark, tmp_path):
+def test_list_partitions_excludes_inflight(fmt, spark, tmp_path, monkeypatch):
     store = str(tmp_path / "t")
     fmt.overwrite_partitions(
         _mk(spark, [(1, "a", "p0"), (2, "b", "p1")]), store, "pbatch"
     )
-    # an abandoned stage must not surface in the listing
-    stage = fmt.stage_path(store)
-    _mk(spark, [(9, "z", "p9")]).write.mode("overwrite").partitionBy(
-        "pbatch"
-    ).parquet(stage)
+    # a swap killed before its commit abandons its stage, which must
+    # not surface in the listing
+    with monkeypatch.context() as m:
+        m.setattr(type(table_format._active()), "commit_swap", _kill_commit)
+        with pytest.raises(RuntimeError, match="injected"):
+            fmt.swap_rewrite(spark, store, _mk(spark, [(9, "z", "p9")]), "pbatch")
+    assert len(os.listdir(str(tmp_path))) == 2  # the store and its stage
     assert fmt.list_partitions(store, "pbatch") == ["p0", "p1"]
     fmt.repair(str(tmp_path), store)
     assert fmt.list_partitions(store, "pbatch") == ["p0", "p1"]
@@ -279,6 +289,19 @@ def test_merge_schema_across_commits(fmt, spark, tmp_path):
     assert sorted(got.columns) == ["extra", "k", "pbatch"]
     vals = {(r.k, r.extra, r.pbatch) for r in got.collect()}
     assert vals == {(1, None, "p0"), (2, "x", "p1")}
+
+
+def test_backends_expose_the_same_operations():
+    """``FORMAT`` and the benchmark's tracer dispatch by name, so an
+    operation only one backend has would fail only at runtime under
+    the other."""
+
+    def ops(cls):
+        return {
+            a for a in dir(cls) if not a.startswith("_") and callable(getattr(cls, a))
+        }
+
+    assert ops(ParquetSwapFormat) == ops(LogManifestFormat)
 
 
 def test_publish_staged_artifact(fmt, tmp_path):
