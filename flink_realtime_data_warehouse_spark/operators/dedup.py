@@ -1562,9 +1562,6 @@ def append_dedup_lsh_index_capped(
 
     from pyspark import StorageLevel
 
-    # roll back a crashed compaction swap before writing beside it (the
-    # df store's read below repairs that one)
-    FORMAT.repair(path, f"{path}/bands")
     stored = _read_lsh_store(new_docs.sparkSession, path, "df")
     sh_capped, delta = _capped_batch_shingles(new_docs, stored, cap)
     sh_capped = sh_capped.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1593,8 +1590,8 @@ def compact_dedup_lsh_index_capped(
     contribution and re-derives identical verdicts (folding it would
     double-count its df delta on replay).
 
-    Each store is rewritten through ``FORMAT.swap_rewrite``; every
-    entry point repairs a store before reading it, so a compaction
+    Each store is rewritten through ``FORMAT.swap_rewrite``; the seam
+    repairs a store before every operation on it, so a compaction
     killed mid-swap rolls back on the next touch instead of leaving
     the store missing."""
     for sub, fold_rows in (
@@ -1602,7 +1599,6 @@ def compact_dedup_lsh_index_capped(
         ("bands", lambda d: d.drop("pbatch")),
     ):
         store = f"{path}/{sub}"
-        FORMAT.repair(path, store)
         if FORMAT.has_data(store):  # a zero-row store has nothing to fold
             fold_store(spark, store, _LSH_STORE_SCHEMAS[sub], fold_rows, exclude_pbatch)
 

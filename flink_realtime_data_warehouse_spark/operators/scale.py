@@ -63,9 +63,8 @@ def compact_parquet_dir(
             if f.endswith(".parquet")
         )
 
-    FORMAT.repair(os.path.dirname(path) or ".", path)
-    before = _count_files(path)
     df = FORMAT.read(spark, path)
+    before = _count_files(path)
     n = df.count()
     n_files = max(1, math.ceil(n / target_rows_per_file))
     FORMAT.swap_rewrite(spark, path, df.repartition(n_files))

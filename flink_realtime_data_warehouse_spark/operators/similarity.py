@@ -1187,20 +1187,11 @@ def ann_ivf_probe(
     # swappable {index}/cells dir (compaction rename-swaps it whole,
     # so the quantizer artifacts and delta store beside it survive the
     # swap); batch-built indexes keep their cell dirs at the top level
-    cells_path = os.path.join(index_path, "cells")
-    streaming_layout = os.path.isdir(cells_path) or any(
-        d.startswith("cells__") for d in os.listdir(index_path)
-    )
-    if streaming_layout:
-        from flink_realtime_data_warehouse_spark.streaming.table_format import (
-            FORMAT,
-        )
+    from flink_realtime_data_warehouse_spark.streaming.table_format import FORMAT
 
-        FORMAT.repair(index_path, cells_path)
-        FORMAT.repair(index_path, os.path.join(index_path, "_deltas"))
-        vec_root = cells_path
-    else:
-        vec_root = index_path
+    cells_path = os.path.join(index_path, "cells")
+    streaming_layout = FORMAT.exists(cells_path)
+    vec_root = cells_path if streaming_layout else index_path
     pruned = _index_df(spark, vec_root, via_format=streaming_layout).filter(
         F.col("cell").isin(sorted(part_to_q))
     )
@@ -1213,11 +1204,7 @@ def ann_ivf_probe(
     # delta partition has not been cleared yet (a vector then exists
     # in both the main index and the tail).
     deltas_path = os.path.join(index_path, "_deltas")
-    if os.path.isdir(deltas_path):
-        from flink_realtime_data_warehouse_spark.streaming.table_format import (
-            FORMAT,
-        )
-
+    if FORMAT.exists(deltas_path):
         tail = (
             FORMAT.read(
                 spark,

@@ -114,15 +114,6 @@ def _run_stream(
 _CLEAN_SCHEMA = "doc_id bigint, text string, pbatch string"
 
 
-def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """The lake store at ``path``. Empty only when no batch ever created
-    it (the zero-row tier); a store that exists but cannot be read
-    fails loudly."""
-    if not FORMAT.exists(path):
-        return spark.createDataFrame([], schema)
-    return FORMAT.read(spark, path, schema)
-
-
 def _ingest_lake(spark: SparkSession, row: str, docs: DataFrame, **flags) -> str:
     """``docs`` through the REAL ``start_history_dedup_ingest(**flags)``:
     the history slice (doc_id % 5 != 4) as micro-batch 0, the incoming
@@ -697,7 +688,7 @@ def histdedup_gate_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFra
         near_dup_gate=True,
     )
     return (
-        _read_store(
+        FORMAT.read(
             spark,
             os.path.join(out, "near_dups"),
             "doc_id bigint, doc_hist bigint, pbatch string",
@@ -835,7 +826,7 @@ def lake_takedown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, out, docs.filter(F.pmod("doc_id", F.lit(17)) == 3).select("doc_id")
     )
     return (
-        _read_store(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA)
+        FORMAT.read(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA)
         .select("doc_id")
         .orderBy("doc_id")
     )
@@ -894,7 +885,7 @@ def lake_pii_scrubbed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         redact_pii=True,
     )
     return (
-        _read_store(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA)
+        FORMAT.read(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA)
         .select("doc_id", "text")
         .orderBy("doc_id")
     )
@@ -951,10 +942,10 @@ def histdedup_bloom_streaming_parity(
         load_table(spark, sf_dir, "documents"),
         bloom_prefilter=True,
     )
-    clean = _read_store(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA).select(
+    clean = FORMAT.read(spark, os.path.join(out, "clean"), _CLEAN_SCHEMA).select(
         "doc_id", F.lit("new").alias("status")
     )
-    dups = _read_store(
+    dups = FORMAT.read(
         spark,
         os.path.join(out, "dups"),
         "doc_id bigint, content_hash string, status string, pbatch string",

@@ -23,6 +23,10 @@ from flink_realtime_data_warehouse_spark.operators.parse import parse_with_dirty
 from flink_realtime_data_warehouse_spark.operators.split import split_log
 from flink_realtime_data_warehouse_spark.schemas import BEHAVIOR_LOG_SCHEMA, TOPIC_DB_SCHEMA
 from flink_realtime_data_warehouse_spark.streaming import pbatch as pb
+from flink_realtime_data_warehouse_spark.streaming.sinks import (
+    start_stream,
+    write_stream_parquet,
+)
 from flink_realtime_data_warehouse_spark.streaming.state import (
     correct_is_new,
     daily_unique_visitors,
@@ -32,15 +36,6 @@ from flink_realtime_data_warehouse_spark.streaming.table_format import (
     FORMAT,
     atomic_write_text,
 )
-
-
-def _start(writer, available_now: bool):
-    """Start a configured ``DataStreamWriter``: drain what is available
-    and stop (``available_now``), or run on the default processing-time
-    trigger until stopped."""
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def base_log_job(
@@ -131,17 +126,16 @@ def base_log_job(
     # writes corrected log + all five splits from it (the reference is
     # likewise a single job; a second query would run a second copy of
     # the ST1 state store over a second source read)
-    q1 = _start(
+    q1 = start_stream(
         corrected.writeStream.foreachBatch(_write_splits)
         .option("checkpointLocation", os.path.join(checkpoint_root, "split")),
         available_now,
     )
     queries.append(q1)
-    q3 = _start(
-        dirty.writeStream.format("parquet")
-        .option("path", os.path.join(out_root, "dirty_log"))
-        .option("checkpointLocation", os.path.join(checkpoint_root, "dirty"))
-        .outputMode("append"),
+    q3 = write_stream_parquet(
+        dirty,
+        os.path.join(out_root, "dirty_log"),
+        os.path.join(checkpoint_root, "dirty"),
         available_now,
     )
     queries.append(q3)
@@ -167,13 +161,7 @@ def unique_visitor_job(
         F.col("ts"),
     )
     uv = daily_unique_visitors(flat)
-    return _start(
-        uv.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append"),
-        available_now,
-    )
+    return write_stream_parquet(uv, out_path, checkpoint, available_now)
 
 
 def user_jump_job(
@@ -196,13 +184,7 @@ def user_jump_job(
     # reference uses a monotonous (0-delay) watermark, DwdTrafficUserJumpDetail.java:71-82
     watermarked = paged.withWatermark("event_time", "0 seconds")
     bounces = detect_bounces(watermarked)
-    return _start(
-        bounces.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append"),
-        available_now,
-    )
+    return write_stream_parquet(bounces, out_path, checkpoint, available_now)
 
 
 def parse_changelog_stream(raw_stream: DataFrame) -> DataFrame:
@@ -246,13 +228,8 @@ def unique_visitor_job_idiomatic(
     uv = flat.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
         ["mid", "dt"]
     )
-    return _start(
-        uv.drop("event_time")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append"),
-        available_now,
+    return write_stream_parquet(
+        uv.drop("event_time"), out_path, checkpoint, available_now
     )
 
 
@@ -319,13 +296,7 @@ def stream_stream_conversion_job(
         F.col("action.item").alias("cart_item"),
         "action_ts",
     )
-    return _start(
-        joined.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append"),
-        available_now,
-    )
+    return write_stream_parquet(joined, out_path, checkpoint, available_now)
 
 
 def start_streaming_decontam(
@@ -387,7 +358,7 @@ def start_streaming_decontam(
         )
         _sink(joined.filter(flagged), quarantine_path)
 
-    q = _start(
+    q = start_stream(
         doc_stream.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint),
         available_now,
@@ -477,7 +448,7 @@ def start_training_ingest_pipeline(
             scored.filter(~flagged & ~low_q).drop("contaminated"), "clean"
         )
 
-    q = _start(
+    q = start_stream(
         deduped.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint),
         available_now,
@@ -562,8 +533,6 @@ def compact_ann_ivf_deltas(
 
     cells = os.path.join(index_root, "cells")
     deltas = os.path.join(index_root, "_deltas")
-    FORMAT.repair(index_root, cells)
-    FORMAT.repair(index_root, deltas)
     if not FORMAT.exists(deltas) or not FORMAT.exists(cells):
         return
     d = FORMAT.read(
@@ -625,8 +594,9 @@ def start_embedding_ingest(
     excluding the in-flight batch. Crash windows: mid-build → marker
     absent → deterministic rebuild; after build before checkpoint
     commit → the builder batch's replay sees its own marker and skips
-    (its contribution IS the index); mid-compaction-swap →
-    ``_repair_swap_dir`` (run by every reader and mutator) rolls back;
+    (its contribution IS the index); mid-compaction-swap → the next
+    seam operation on the store rolls it back (``FORMAT`` repairs
+    first);
     between compaction's two swaps → folded rows exist in both stores
     until the probe dedup / next fold absorbs them. Quantizer drift
     under distribution shift is the standard IVF trade: retrain
@@ -650,8 +620,6 @@ def start_embedding_ingest(
     def _process(batch: DataFrame, batch_id: int) -> None:
         pbatch = f"{run_id}-{batch_id}"
         vecs = batch.select("vec_id", "v").dropDuplicates(["vec_id"])
-        FORMAT.repair(index_root, cells)
-        FORMAT.repair(index_root, deltas)
         if os.path.exists(marker):
             with open(marker, encoding="utf-8") as f:
                 built_by = f.read().strip()
@@ -711,7 +679,7 @@ def start_embedding_ingest(
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_ann_ivf_deltas(spark, index_root, exclude_pbatch=pbatch)
 
-    return _start(
+    return start_stream(
         emb_stream.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint),
         available_now,
@@ -733,7 +701,6 @@ def compact_history_digest_store(
     digests (``streaming/pbatch.py::fold_store``). A swap killed
     midway is repaired by the next touch of the store."""
     store = os.path.join(out_root, "digests")
-    FORMAT.repair(out_root, store)
     if not FORMAT.exists(store):
         return
     # bloom watermark maintenance (r9, ADVICE): the fold renames
@@ -862,19 +829,16 @@ def _classify(b: _IngestBatch, docs: DataFrame, bloom_prefilter: bool) -> DataFr
     b.stage("classify")
     no_history = b.spark.createDataFrame([], "content_hash string")
     bloom, digests = b.path("bloom"), b.path("digests")
-    if bloom_prefilter:
-        FORMAT.repair(b.out_root, bloom)
-        FORMAT.repair(b.out_root, digests)
-        if FORMAT.exists(digests) and (
-            not FORMAT.exists(bloom)
-            # the digest store holds partitions the watermark never
-            # covered (batches ingested with the flag off, or a fold of
-            # them): probing that subset filter would read ingested
-            # documents as new
-            or set(FORMAT.list_partitions(digests, "pbatch"))
-            - (_bloom_covered(bloom) or set())
-        ):
-            _rebuild_bloom(b)
+    if bloom_prefilter and FORMAT.exists(digests) and (
+        not FORMAT.exists(bloom)
+        # the digest store holds partitions the watermark never
+        # covered (batches ingested with the flag off, or a fold of
+        # them): probing that subset filter would read ingested
+        # documents as new
+        or set(FORMAT.list_partitions(digests, "pbatch"))
+        - (_bloom_covered(bloom) or set())
+    ):
+        _rebuild_bloom(b)
     if bloom_prefilter and FORMAT.exists(bloom):
         flagged = b.persist(
             dedup.probe_bloom_membership(
@@ -1110,7 +1074,7 @@ def start_history_dedup_ingest(
         bloom_prefilter=bloom_prefilter,
         redact_pii=redact_pii,
     )
-    return _start(
+    return start_stream(
         doc_stream.writeStream.foreachBatch(ingest)
         .option("checkpointLocation", checkpoint),
         available_now,

@@ -17,7 +17,6 @@ replayed batch still excludes exactly its own prior rows.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,13 +51,9 @@ def read_history(
     spark: SparkSession, path: str, schema: str, exclude_pbatch: str | None = None
 ) -> DataFrame:
     """Committed rows of the store at ``path`` minus the partition
-    ``exclude_pbatch``. A half-finished swap is repaired before the
-    existence probe, so only a store that does not exist yet reads
-    empty. The explicit ``schema`` keeps a store whose batches were all
-    empty readable."""
-    FORMAT.repair(os.path.dirname(path), path)
-    if not FORMAT.exists(path):
-        return spark.createDataFrame([], schema)
+    ``exclude_pbatch``. Under the explicit ``schema`` a store that does
+    not exist yet reads empty, and so does one whose batches were all
+    empty."""
     return split_in_flight(FORMAT.read(spark, path, schema), exclude_pbatch)[1]
 
 

@@ -22,15 +22,13 @@ purge, not the lake):
   (test-pinned by mtime/size/inode in tests/test_takedown.py). At a
   100-TB lake a 1,000-doc erasure therefore rewrites at most the
   handful of batch partitions those docs landed in.
-- Each affected partition is rewritten behind the same rename-swap
-  discipline as compaction: the keep-rows of all affected partitions
-  are staged to ``{store}__tmp_*`` in one Spark job, then each
-  partition directory is swapped (``pbatch=X`` → ``pbatch=X__old_*``,
-  stage dir renamed in, backup dropped). ``_repair_swap_dir`` (run
-  first by every reader and mutator) rolls back a half-swapped
-  partition and drops stale stage/backup dirs, so a takedown killed
-  mid-swap converges on the next touch. A partition whose every row
-  is purged is simply renamed away.
+- The keep-rows of all affected partitions go to the table-format
+  seam in one ``FORMAT.swap_partitions`` call, the same commit
+  compaction and the DIM MERGE use; a partition whose every row is
+  purged is dropped. How a partition swap stages, commits and
+  recovers is the seam's business (``streaming/table_format.py``):
+  it repairs a store before every operation on it, so a takedown
+  killed mid-swap converges on the next touch.
 - Partition values are escaped-alphanumeric by construction
   (``<run_id>-<batch_id>`` / ``__compacted__`` / integer cells); a
   value that is not filesystem-literal falls back to the legacy
@@ -128,8 +126,9 @@ def _pruned_purge(
     the batch count, not the corpus — safe to collect); the keep-rows
     of just those partitions are staged in one job; each affected
     partition directory is then rename-swapped individually. A crash
-    anywhere converges: half-swapped partitions roll back under
-    ``_repair_swap_dir`` and the tombstone log re-drives the purge.
+    anywhere converges: the next seam operation on the store rolls a
+    half-swapped partition back, and the tombstone log re-drives the
+    purge.
     """
     part_counts = hits.groupBy(part_col).count().collect()
     n = int(sum(r["count"] for r in part_counts))
@@ -187,7 +186,6 @@ def takedown_documents(
         #    for the block_reingest=False digest pass, captured BEFORE
         #    any rewrite (staged to scratch, never collected)
         clean_path = os.path.join(out_root, "clean")
-        FORMAT.repair(out_root, clean_path)
         purged_hashes = None
         if FORMAT.exists(clean_path) and FORMAT.has_data(clean_path):
             clean = FORMAT.read(spark, clean_path, merge_schema=True)
@@ -240,7 +238,6 @@ def takedown_documents(
         # 3) doc-keyed evidence stores
         for rel, schema in _STORE_SCHEMAS.items():
             path = os.path.join(out_root, rel)
-            FORMAT.repair(os.path.dirname(path), path)
             if not FORMAT.exists(path):
                 continue
             df = FORMAT.read(spark, path, schema)
@@ -276,7 +273,6 @@ def takedown_documents(
         # 4) digests — policy pass (reads only the already-materialized
         #    scratch hash set, so it is independent of the other purges)
         digests_path = os.path.join(out_root, "digests")
-        FORMAT.repair(out_root, digests_path)
         if (
             not block_reingest
             and purged_hashes is not None
@@ -366,7 +362,6 @@ def _purge_vector_stores(spark: SparkSession, index_root: str, ids: DataFrame) -
     )
     removed: dict[str, int] = {}
     cells = os.path.join(index_root, "cells")
-    FORMAT.repair(index_root, cells)
     if FORMAT.exists(cells) and FORMAT.has_data(cells):
         main = FORMAT.read(spark, cells)
         n = _pruned_purge(
@@ -381,7 +376,6 @@ def _purge_vector_stores(spark: SparkSession, index_root: str, ids: DataFrame) -
         if n:
             _invalidate_index_df(spark, cells)
     deltas = os.path.join(index_root, "_deltas")
-    FORMAT.repair(index_root, deltas)
     if FORMAT.exists(deltas):
         d = FORMAT.read(
             spark, deltas, "cell int, vec_id bigint, v array<float>, pbatch string"

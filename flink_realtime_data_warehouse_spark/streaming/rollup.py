@@ -32,7 +32,6 @@ exist to feed.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -148,15 +147,9 @@ def read_minute_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     uses (count→sum, sum→sum, max→max); with compaction keeping
     segments-per-day bounded, the scan is O(|minutes|), not O(|events|).
     """
-    # roll back a compaction crashed between its two renames — without
-    # this, a killed compact leaves the store renamed away and the
-    # serving read would silently report an EMPTY rollup
-    FORMAT.repair(os.path.dirname(store_dir) or ".", store_dir)
-    if not FORMAT.exists(store_dir):
-        # zero batches ever committed (cold start / empty day)
-        return spark.createDataFrame([], _SERVING_SCHEMA)
-    # explicit schema: a store whose only committed batches were empty
-    # has no data files to infer from, but is still a valid empty store
+    # explicit schema: a store no batch ever committed (cold start /
+    # empty day), or whose only committed batches were empty, reads as
+    # an empty store
     store = FORMAT.read(spark, store_dir, _STORE_SCHEMA)
     return store.groupBy("bucket_ms").agg(
         F.sum("n").cast("bigint").alias("n_events"),
@@ -176,7 +169,6 @@ def compact_minute_rollup(spark: SparkSession, store_dir: str) -> None:
     (``FORMAT.swap_rewrite`` — stage, rename-swap, repair-covered). On
     a transactional table format this whole function is REPLACE WHERE.
     """
-    FORMAT.repair(os.path.dirname(store_dir) or ".", store_dir)
     if not FORMAT.exists(store_dir):
         return
     store = FORMAT.read(spark, store_dir, _STORE_SCHEMA)
@@ -241,7 +233,6 @@ def expire_rollup_chunks(
         # EVERYTHING — the opposite of "keep nothing" (ADVICE r9);
         # dropping every chunk is spelled older_than_ms explicitly
         raise ValueError("keep_days must be >= 1")
-    FORMAT.repair(os.path.dirname(store_dir) or ".", store_dir)
     if not FORMAT.exists(store_dir):
         return []
     # sweep husks from a prior crashed expiry
@@ -269,9 +260,7 @@ def expire_rollup_chunks(
     for day in days:
         if day >= cutoff:
             continue
-        husks.append(
-            FORMAT.drop_partition(store_dir, f"pday={day}", defer_delete=True)
-        )
+        husks.append(FORMAT.drop_partition(store_dir, f"pday={day}"))
         dropped.append(day)
     for h in husks:
         if h is not None:  # a log-backed store has no physical husk

@@ -24,7 +24,7 @@ from flink_realtime_data_warehouse_spark.schemas import (
     DIM_KEPT_TYPES,
     TABLE_PROCESS_SCHEMA,
 )
-from flink_realtime_data_warehouse_spark.streaming.sinks import DimStore
+from flink_realtime_data_warehouse_spark.streaming.sinks import DimStore, start_stream
 
 #: Debezium change envelope for the config table (the shape
 #: JsonDebeziumDeserializationSchema emits — reference DimApp.java:74-86,
@@ -159,11 +159,9 @@ def start_dim_app(
             config = spark.read.parquet(config_path)
         route_changelog_batch(batch, config, store)
 
-    writer = (
+    return start_stream(
         changelog_stream.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        .outputMode("update"),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

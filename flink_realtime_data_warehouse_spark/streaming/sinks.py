@@ -99,16 +99,11 @@ class DimStore:
     def exists(self, table: str) -> bool:
         return FORMAT.exists(self._path(table))
 
-    def _repair(self, table: str) -> None:
-        """Crash-recovery sweep before any read or mutation; see ``table_format._repair_swap_dir``."""
-        FORMAT.repair(self.root, self._path(table))
-
     def read(self, table: str) -> DataFrame:
         # mergeSchema: partition-scoped rewrites leave files with the
         # schema of the batch that last touched them, so an evolving
         # config whitelist yields mixed footers — union them on read
         # (Delta/Iceberg track this in the table log instead)
-        self._repair(table)
         return (
             FORMAT.read(self.spark, self._path(table), merge_schema=True)
             .drop("_pk_part")
@@ -131,7 +126,6 @@ class DimStore:
         ``MERGE WHEN MATCHED`` and keeps the same interface.
         """
         path = self._path(table)
-        self._repair(table)
         meta = _load_meta(path)
         create = meta is None
         if create:  # K4: create-table-if-not-exists
@@ -177,7 +171,6 @@ class DimStore:
         Iceberg ``DELETE WHERE`` and keeps the interface.
         """
         path = self._path(table)
-        self._repair(table)
         meta = _load_meta(path)
         if meta is None:
             return 0
@@ -213,18 +206,25 @@ class DimStore:
         )
 
 
-def write_stream_parquet(df: DataFrame, path: str, checkpoint: str, available_now: bool = True):
-    """K1 analogue: append stream → parquet table (at-least-once per file,
-    exactly-once per batch via the checkpoint's write-ahead log)."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
+def start_stream(writer, available_now: bool):
+    """Start a configured ``DataStreamWriter``: drain what is available
+    and stop (``available_now``), or run on the default processing-time
+    trigger until stopped."""
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def write_stream_parquet(df: DataFrame, path: str, checkpoint: str, available_now: bool = True):
+    """K1 analogue: append stream → parquet table (at-least-once per file,
+    exactly-once per batch via the checkpoint's write-ahead log)."""
+    return start_stream(
+        df.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append"),
+        available_now,
+    )
 
 
 def write_stream_kafka(df: DataFrame, topic: str, bootstrap: str, checkpoint: str):
@@ -330,7 +330,6 @@ class DimHistoryStore:
         return FORMAT.exists(self._path(table))
 
     def read(self, table: str) -> DataFrame:
-        FORMAT.repair(self.root, self._path(table))
         return (
             FORMAT.read(self.spark, self._path(table), merge_schema=True)
             .drop("_pk_part")
@@ -365,7 +364,6 @@ class DimHistoryStore:
         touched hash partitions are read back and swapped.
         """
         path = self._path(table)
-        FORMAT.repair(self.root, path)
         meta = _load_meta(path)
         create = meta is None
         if create:

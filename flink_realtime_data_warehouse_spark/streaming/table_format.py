@@ -37,7 +37,10 @@ Delta mapping):
 =======================  =============================================
  operation                Delta Lake equivalent
 =======================  =============================================
- ``repair``               no-op — the transaction log IS the recovery
+ ``repair``               run by ``FORMAT`` itself before every other
+                          operation on a store; no caller repairs.
+                          Delta: no-op — the transaction log IS the
+                          recovery
  ``read``                 ``spark.read.format("delta").load(path)``
  ``overwrite_partitions`` writer with
                           ``partitionOverwriteMode=dynamic`` (or
@@ -77,14 +80,23 @@ a Delta DimStore would be ``MERGE INTO`` plus this module's ``read``.
 
 Crash semantics of the parquet backend (what a swap means here): every
 rewrite stages to a ``__tmp_`` sibling, then renames; a kill between
-renames leaves a ``__old_`` backup that ``repair`` — run first by every
-reader and mutator — rolls back or forward. Idempotent re-drive (a
-tombstone log, a checkpoint replay) converges the multi-store
-composition; single-store visibility is atomic at the rename.
+renames leaves a ``__old_`` backup that ``repair`` rolls back or
+forward. The seam runs ``repair`` on a store before every operation
+that reads or mutates it (``_FormatProxy``), before that operation
+stages anything, so a torn store is recovered by whichever operation
+touches it next. Idempotent re-drive (a tombstone log, a checkpoint
+replay) converges the multi-store composition; single-store visibility
+is atomic at the rename.
+
+A store that was never committed reads as an empty frame when the
+caller passes an explicit schema, and raises when it passes none, on
+both backends.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import json
 import os
 import shutil
@@ -116,56 +128,51 @@ def _write_tree(df: DataFrame, stage: str, part_col=None) -> None:
     w.parquet(stage)
 
 
-def _repair_swap_dir(root: str, path: str) -> None:
-    """Shared crash-recovery sweep for the rename-swap table stores:
-    roll back half-finished partition swaps, restore a renamed-away
-    table dir, drop stale staging and backup dirs. The failure
-    taxonomy: a process killed inside a mutator can leave (a) a
-    partition renamed away to ``<part>=N__old_x`` with no replacement
-    in place — without repair the next read would silently miss that
-    partition (real data loss) and Spark would parse the leftover dir
-    as a bogus partition value; (b) a completed swap whose backup dir
-    survived; (c) staging ``__tmp`` / whole-table ``__old`` siblings.
-    Repair rolls (a) back (the batch never committed — the checkpoint
-    replays it in full), deletes (b)'s backup, restores a missing
-    table dir from (c)'s whole-table backup, and drops stale staging
-    dirs. Verified end-to-end by tests/test_fault_injection.py."""
-    base = os.path.basename(path)
-    if not os.path.isdir(path) and os.path.isdir(root):
-        # whole-table swap interrupted between rename-away and
-        # rename-in: restore the backup
-        for d in sorted(os.listdir(root)):
-            if d.startswith(f"{base}__old_"):
-                os.rename(os.path.join(root, d), path)
-                break
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if d.startswith(f"{base}__tmp_") or d.startswith(f"{base}__old_"):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    if os.path.isdir(path):
-        for d in os.listdir(path):
-            # partition-level half-swaps: PK-hash partitions (DimStore
-            # MERGE), the pruned takedown rewrites' pbatch/cell
-            # partitions (streaming/retention.py), and the rollup
-            # store's pday chunks share the discipline
-            if "__old_" in d and d.startswith(
-                ("_pk_part=", "pbatch=", "cell=", "pday=")
-            ):
-                dst = os.path.join(path, d.split("__old_")[0])
-                src = os.path.join(path, d)
-                if os.path.isdir(dst):
-                    shutil.rmtree(src, ignore_errors=True)  # swap completed
-                else:
-                    os.rename(src, dst)  # roll back the half-swap
-
-
 class ParquetSwapFormat:
     """The parquet + rename-swap implementation — today's backend."""
 
-    def repair(self, root: str, path: str) -> None:
-        """Roll back/forward any half-finished swap under ``path``
-        (whole-store and partition-level). Delta: no-op."""
-        _repair_swap_dir(root, path)
+    def repair(self, path: str) -> None:
+        """Crash-recovery sweep of the store at ``path``; ``FORMAT``
+        runs it before every operation on the store. A process killed
+        inside a mutator can leave (a) a partition renamed away to
+        ``<part>=N__old_x`` with no replacement in place — without
+        repair a read would silently miss that partition and Spark
+        would parse the leftover dir as a bogus partition value; (b) a
+        completed swap whose backup dir survived; (c) staging
+        ``__tmp_`` / whole-store ``__old_`` siblings. Repair rolls (a)
+        back (the batch never committed — the checkpoint replays it in
+        full), deletes (b)'s backup, restores a missing store from
+        (c)'s whole-store backup, and drops stale staging dirs.
+        Verified end-to-end by tests/test_fault_injection.py.
+        Delta: no-op."""
+        root = os.path.dirname(path) or "."
+        base = os.path.basename(path)
+        if not os.path.isdir(path) and os.path.isdir(root):
+            # whole-store swap interrupted between rename-away and
+            # rename-in: restore the backup
+            for d in sorted(os.listdir(root)):
+                if d.startswith(f"{base}__old_"):
+                    os.rename(os.path.join(root, d), path)
+                    break
+        if os.path.isdir(root):
+            for d in os.listdir(root):
+                if d.startswith(f"{base}__tmp_") or d.startswith(f"{base}__old_"):
+                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        if os.path.isdir(path):
+            for d in os.listdir(path):
+                # partition-level half-swaps: PK-hash partitions (DimStore
+                # MERGE), the pruned takedown rewrites' pbatch/cell
+                # partitions (streaming/retention.py), and the rollup
+                # store's pday chunks share the discipline
+                if "__old_" in d and d.startswith(
+                    ("_pk_part=", "pbatch=", "cell=", "pday=")
+                ):
+                    dst = os.path.join(path, d.split("__old_")[0])
+                    src = os.path.join(path, d)
+                    if os.path.isdir(dst):
+                        shutil.rmtree(src, ignore_errors=True)  # swap completed
+                    else:
+                        os.rename(src, dst)  # roll back the half-swap
 
     def read(
         self,
@@ -175,9 +182,14 @@ class ParquetSwapFormat:
         merge_schema: bool = False,
     ) -> DataFrame:
         """Read the store. An explicit ``schema`` both pins types and
-        makes empty stores (partition dirs with no footers) readable.
-        Delta: ``spark.read.format("delta").load(path)`` — the log
-        carries the schema, so the empty-store corner vanishes."""
+        makes empty stores readable: a never-committed store reads as
+        an empty frame, and a committed one with no footers (partition
+        dirs only) as an empty scan. Without a schema a never-committed
+        store raises. Delta: ``spark.read.format("delta").load(path)``
+        — the log carries the schema, so the empty-store corner
+        vanishes."""
+        if schema is not None and not os.path.isdir(path):
+            return spark.createDataFrame([], schema)
         r = spark.read
         if schema is not None:
             r = r.schema(schema)
@@ -209,7 +221,8 @@ class ParquetSwapFormat:
     def _stage_path(self, path: str) -> str:
         """The staging sibling for a swap of ``path``. The name carries
         the ``__tmp_`` marker ``repair`` recognizes, so a crash that
-        abandons the stage is swept on the next touch."""
+        abandons the stage is swept by the next operation on the
+        store."""
         return f"{path}__tmp_{uuid.uuid4().hex[:8]}"
 
     def commit_swap(self, path: str, stage: str) -> None:
@@ -218,7 +231,9 @@ class ParquetSwapFormat:
         the IVF cold build's adoption of the tree
         ``build_ann_ivf_index`` wrote. Parquet: rename-away + rename-in
         (a kill between the two leaves a ``__old_`` backup ``repair``
-        restores). Delta: the ``mode("overwrite")`` commit."""
+        restores). ``swap_rewrite`` commits through it directly, not
+        through ``FORMAT``, so no repair runs between its staging and
+        its commit. Delta: the ``mode("overwrite")`` commit."""
         if os.path.isdir(path):
             old = f"{path}__old_{uuid.uuid4().hex[:8]}"
             os.rename(path, old)
@@ -280,39 +295,31 @@ class ParquetSwapFormat:
 
     # -- partition metadata operations --------------------------------------
 
-    def drop_partition(
-        self,
-        path: str,
-        part_dir: str,
-        husk_prefix: str = "_expired_",
-        defer_delete: bool = False,
-    ) -> str | None:
+    _HUSK_PREFIX = "_expired_"
+
+    def drop_partition(self, path: str, part_dir: str) -> str:
         """Drop one whole partition by metadata alone — no data file
         opened (the hypertable ``drop_chunks`` unit). Visibility flips
         atomically at the rename to an underscore-prefixed husk
-        (invisible to Spark reads); a crash before the delete leaves a
-        husk ``sweep_husks`` reaps. With ``defer_delete`` the husk is
-        left for the caller (returned), so a multi-chunk policy can
-        flip EVERY chunk invisible in O(renames) before paying any
-        per-file unlink cost — measured: deletion grows with the file
-        count (3.5 s over 23 chunks x 120 segments) while the rename
-        phase stays milliseconds. Delta: ``DELETE WHERE`` on the
-        partition predicate — a log entry; VACUUM is the deferred
-        delete."""
-        husk = os.path.join(path, f"{husk_prefix}{uuid.uuid4().hex[:8]}")
+        (invisible to Spark reads), which is returned for the caller
+        to delete; one the caller never deletes is reaped by
+        ``sweep_husks``. A multi-chunk policy can so flip EVERY chunk
+        invisible in O(renames) before paying any per-file unlink cost
+        — measured: deletion grows with the file count (3.5 s over 23
+        chunks x 120 segments) while the rename phase stays
+        milliseconds. Delta: ``DELETE WHERE`` on the partition
+        predicate — a log entry; VACUUM is the deferred delete."""
+        husk = os.path.join(path, f"{self._HUSK_PREFIX}{uuid.uuid4().hex[:8]}")
         os.rename(os.path.join(path, part_dir), husk)
-        if defer_delete:
-            return husk
-        shutil.rmtree(husk, ignore_errors=True)
-        return None
+        return husk
 
-    def sweep_husks(self, path: str, husk_prefix: str = "_expired_") -> None:
-        """Reap husks left by a ``drop_partition`` crashed between its
-        rename and delete. Delta: no-op (VACUUM handles data files)."""
+    def sweep_husks(self, path: str) -> None:
+        """Reap husks ``drop_partition`` left undeleted. Delta: no-op
+        (VACUUM handles data files)."""
         if not os.path.isdir(path):
             return
         for d in os.listdir(path):
-            if d.startswith(husk_prefix):
+            if d.startswith(self._HUSK_PREFIX):
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
     def list_partitions(self, path: str, part_col: str) -> list[str]:
@@ -410,14 +417,16 @@ class LogManifestFormat:
           side-<uuid>/<name>        # sidecar-only commits
 
     The latest manifest IS the table: it maps each committed leaf
-    partition (nested ``k=v`` components joined by ``/``) to the
-    segment dir holding its files, lists unpartitioned segments, and
-    names the snapshot's sidecar artifacts. Everything on disk that
-    the latest manifest does not reference is invisible to readers
-    and reclaimed by ``sweep_husks`` (the VACUUM analogue); a crash
+    partition (nested ``k=v`` components joined by ``/``) to its one
+    location (``seg-<uuid>/<leaf>``, the dir holding its files), lists
+    unpartitioned segments, and names the snapshot's sidecar
+    artifacts. Everything on disk that the latest manifest does not
+    reference is invisible to readers and reclaimed by
+    ``sweep_husks`` (the VACUUM analogue); a crash
     at ANY point before the manifest replace leaves the previous
     snapshot fully intact — there is no torn-swap window at all, so
-    ``repair`` only sweeps debris, never rolls data back or forward.
+    ``repair`` (run by ``FORMAT`` before every operation on the store)
+    only sweeps debris, never rolls data back or forward.
 
     Semantic deltas vs the parquet rename-swap backend (recorded in
     BASELINE.md):
@@ -439,7 +448,10 @@ class LogManifestFormat:
 
     Single-writer-per-store discipline, exactly like the parquet
     backend (the streaming checkpoint serializes mutators); manifest
-    sequence numbers are not a lock.
+    sequence numbers are not a lock. Because every operation repairs
+    first, no operation on a store may overlap a write to it, reads
+    included: the read's repair would sweep the write's uncommitted
+    stage or segment.
     """
 
     _SEG_PREFIX = "seg-"
@@ -550,16 +562,15 @@ class LogManifestFormat:
     ) -> None:
         """Shared commit body of every write: adopt the stage as a
         segment, then publish ONE manifest describing the new
-        snapshot. Partition values map to lists of segment leaves (the
-        Iceberg file-list shape); a commit sets each leaf it writes to
-        its one new location."""
+        snapshot. A commit points each leaf it writes at its location
+        in the new segment."""
         seg = self._adopt_stage(path, stage)
         segdir = os.path.join(path, seg)
         cols, leaves, sides, has_files = self._scan_stage(segdir)
         m = self._next(path)
         if replace_all:
             m["part_cols"] = cols
-            m["partitions"] = {lf: [f"{seg}/{lf}"] for lf in leaves}
+            m["partitions"] = {lf: f"{seg}/{lf}" for lf in leaves}
             m["segments"] = [seg] if has_files else []
             m["sidecars"] = {s: f"{seg}/{s}" for s in sides}
         else:
@@ -576,11 +587,11 @@ class LogManifestFormat:
                 # absent from the stage is dropped wholesale
                 named = {f"{part_col}={p}" for p in named_parts}
                 m["partitions"] = {
-                    lf: locs for lf, locs in m["partitions"].items()
+                    lf: loc for lf, loc in m["partitions"].items()
                     if lf.split("/", 1)[0] not in named
                 }
             for lf in leaves:
-                m["partitions"][lf] = [f"{seg}/{lf}"]
+                m["partitions"][lf] = f"{seg}/{lf}"
             if has_files:
                 m["segments"].append(seg)
             for s in sides:
@@ -589,13 +600,14 @@ class LogManifestFormat:
 
     # -- interface ------------------------------------------------------------
 
-    def repair(self, root: str, path: str) -> None:
+    def repair(self, path: str) -> None:
         """Sweep debris a crashed mutator can leave: staging siblings
         (stage minted, never adopted), manifest tmp files, and
         segments referenced by NO manifest in the log (adopted, never
         committed). Data referenced by any manifest is never touched —
         there is no half-swap to roll back; the previous manifest is
         still the truth."""
+        root = os.path.dirname(path) or "."
         base = os.path.basename(path)
         if os.path.isdir(root):
             for d in os.listdir(root):
@@ -615,12 +627,9 @@ class LogManifestFormat:
         for n in self._manifest_names(path):
             with open(os.path.join(ld, n), encoding="utf-8") as f:
                 m = json.load(f)
-            for locs in m.get("partitions", {}).values():
-                for loc in locs:
-                    referenced.add(loc.split("/", 1)[0])
-            referenced.update(m.get("segments", []))
-            for loc in m.get("sidecars", {}).values():
+            for loc in [*m["partitions"].values(), *m["sidecars"].values()]:
                 referenced.add(loc.split("/", 1)[0])
+            referenced.update(m["segments"])
         for d in os.listdir(path):
             if (
                 d.startswith((self._SEG_PREFIX, self._SIDE_PREFIX))
@@ -652,10 +661,10 @@ class LogManifestFormat:
         disk are never visible — the manifest IS the file listing."""
         m = self._latest(path)
         if m is None:
-            # no committed snapshot: an empty store reads empty under
-            # an explicit schema (never raw-scans the dir — orphan
-            # segments must stay invisible); schemaless is a caller
-            # bug, like the parquet backend's cannot-infer error
+            # no committed snapshot: reads empty under an explicit
+            # schema (never raw-scans the dir — orphan segments must
+            # stay invisible) and raises without one, like the parquet
+            # backend
             if schema is not None:
                 return spark.createDataFrame([], schema)
             raise ValueError(f"no committed snapshot at {path}")
@@ -669,10 +678,9 @@ class LogManifestFormat:
             return r
 
         by_seg = {}
-        for lf, locs in m["partitions"].items():
-            for loc in locs:
-                seg = loc.split("/", 1)[0]
-                by_seg.setdefault(seg, []).append(os.path.join(path, loc))
+        for loc in m["partitions"].values():
+            seg = loc.split("/", 1)[0]
+            by_seg.setdefault(seg, []).append(os.path.join(path, loc))
         parts = [
             _reader()
             .option("basePath", os.path.join(path, seg))
@@ -721,10 +729,7 @@ class LogManifestFormat:
             named_parts=list(parts), part_col=part_col,
         )
 
-    def drop_partition(
-        self, path: str, part_dir: str,
-        husk_prefix: str = "_expired_", defer_delete: bool = False,
-    ):
+    def drop_partition(self, path: str, part_dir: str) -> None:
         """Pure log entry (the Delta ``DELETE WHERE`` on a partition
         predicate): one manifest commit removes every leaf under the
         named first-level partition. Returns None — there is no husk;
@@ -743,7 +748,7 @@ class LogManifestFormat:
         self._commit(path, m)
         return None
 
-    def sweep_husks(self, path: str, husk_prefix: str = "_expired_") -> None:
+    def sweep_husks(self, path: str) -> None:
         """VACUUM: reclaim everything the LATEST manifest does not
         reference — whole superseded/orphan segments, dropped leaf
         dirs inside still-live segments — and prune the manifest log
@@ -752,14 +757,11 @@ class LogManifestFormat:
         m = self._latest(path)
         if m is None:
             return
-        live_segs = set(m["segments"])
-        live_leaves = set()
-        for lf, locs in m["partitions"].items():
-            for loc in locs:
-                live_segs.add(loc.split("/", 1)[0])
-                live_leaves.add(loc)
-        for loc in m["sidecars"].values():
-            live_segs.add(loc.split("/", 1)[0])
+        live_leaves = set(m["partitions"].values())
+        live_segs = set(m["segments"]) | {
+            loc.split("/", 1)[0]
+            for loc in [*live_leaves, *m["sidecars"].values()]
+        }
         for d in os.listdir(path):
             p = os.path.join(path, d)
             if not d.startswith((self._SEG_PREFIX, self._SIDE_PREFIX)):
@@ -855,10 +857,28 @@ class _FormatProxy:
     (the repo-wide idiom) honors a backend switch made after import —
     selection is SPARK_GRAFT_TABLE_FORMAT or ``set_table_format``,
     per-process, exactly how a Delta deployment would pick its
-    runtime."""
+    runtime.
+
+    It is also where recovery happens: an operation that names a store
+    (a ``path`` parameter) first runs the backend's ``repair`` on that
+    store, before the operation stages anything. So no caller repairs,
+    and no reader relies on an earlier caller having repaired. A
+    backend's calls to its own operations (``swap_rewrite`` committing
+    through ``commit_swap``) do not pass through here, so a repair
+    never sweeps the stage of the operation that is running."""
 
     def __getattr__(self, attr):
-        return getattr(_active(), attr)
+        op = getattr(_active(), attr)
+        sig = inspect.signature(op)
+        if attr == "repair" or "path" not in sig.parameters:
+            return op
+
+        @functools.wraps(op)
+        def repaired(*args, **kwargs):
+            op.__self__.repair(sig.bind(*args, **kwargs).arguments["path"])
+            return op(*args, **kwargs)
+
+        return repaired
 
 
 #: the process-wide backend. Every store mutator and the conformance

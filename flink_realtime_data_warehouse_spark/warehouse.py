@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_realtime_data_warehouse_spark.streaming.sinks import DimStore
+from flink_realtime_data_warehouse_spark.streaming.table_format import FORMAT
 
 
 class Warehouse:
@@ -34,7 +35,13 @@ class Warehouse:
         )
 
     def read_dwd(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.dwd_root, name))
+        """A DWD table: a store of the table-format seam (the split
+        writes of ``base_log_job``) through ``FORMAT``, anything else
+        (the Spark file-sink ``dirty_log``) as plain parquet."""
+        path = os.path.join(self.dwd_root, name)
+        if FORMAT.exists(path):
+            return FORMAT.read(self.spark, path)
+        return self.spark.read.parquet(path)
 
     def register(self) -> list[str]:
         """Register every DWD table and DIM table as a temp view; returns names."""

@@ -103,11 +103,7 @@ def test_dim_upsert_kill_at_manifest_commit_replays(
         ).read()
     )
     on_disk = {d for d in os.listdir(table_dir) if d.startswith("seg-")}
-    referenced = {
-        loc.split("/", 1)[0]
-        for locs in live["partitions"].values()
-        for loc in locs
-    }
+    referenced = {loc.split("/", 1)[0] for loc in live["partitions"].values()}
     assert on_disk == referenced
 
 
@@ -288,8 +284,6 @@ def test_rollup_kill_compact_expire_twin(spark, tmp_path, monkeypatch):
     )
     on_disk = {d for d in os.listdir(crashed) if d.startswith("seg-")}
     referenced = {
-        loc.split("/", 1)[0]
-        for locs in m["partitions"].values()
-        for loc in locs
+        loc.split("/", 1)[0] for loc in m["partitions"].values()
     } | set(m["segments"])
     assert on_disk == referenced

@@ -132,24 +132,36 @@ def test_unique_visitor_idiomatic_variant(spark, tmp_path):
     assert got == [("m1", "2022-07-26"), ("m1", "2022-07-27"), ("m2", "2022-07-26")]
 
 
-def test_warehouse_facade_end_to_end(spark, tmp_path):
+def test_warehouse_facade_end_to_end(spark, tmp_path, table_formats):
+    """Two input files read as two micro-batches, so each DWD store
+    holds two batch commits; the views read them through the table
+    format under either backend."""
     src = str(tmp_path / "src")
     _write(src, "b1.jsonl", [
         _rec("A", BASE, page={"page_id": "home"}, is_new="1"),
         _rec("B", BASE + 1000, page={"page_id": "home"}),
+    ])
+    _write(src, "b2.jsonl", [
         _rec("A", BASE + 2000, page={"page_id": "list", "last_page_id": "home"}),
     ])
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    qs = base_log_job(spark, read_jsonl_stream(spark, src), wh.dwd_root, str(tmp_path / "ckpt"))
-    for q in qs:
-        q.awaitTermination(150)
+    for backend in table_formats:
+        wh = Warehouse(spark, str(tmp_path / backend / "wh"))
+        qs = base_log_job(
+            spark,
+            read_jsonl_stream(spark, src, max_files_per_trigger=1),
+            wh.dwd_root,
+            str(tmp_path / backend / "ckpt"),
+        )
+        for q in qs:
+            q.awaitTermination(150)
 
-    views = wh.register()
-    assert "dwd_traffic_page_log" in views
-    n = wh.sql(
-        "SELECT count(DISTINCT common.mid) AS uv FROM dwd_traffic_page_log"
-    ).first()["uv"]
-    assert n == 2
+        views = wh.register()
+        assert "dwd_traffic_page_log" in views, backend
+        row = wh.sql(
+            "SELECT count(*) AS n, count(DISTINCT common.mid) AS uv"
+            " FROM dwd_traffic_page_log"
+        ).first()
+        assert (row["n"], row["uv"]) == (3, 2), backend
 
 
 def test_base_log_split_carries_corrected_is_new(spark, tmp_path):

@@ -225,7 +225,7 @@ def test_drop_partition_and_sweep(fmt, spark, tmp_path):
     fmt.overwrite_partitions(
         _mk(spark, [(1, "a", "d1"), (2, "b", "d2")]), store, "pbatch"
     )
-    husk = fmt.drop_partition(store, "pbatch=d1", defer_delete=True)
+    husk = fmt.drop_partition(store, "pbatch=d1")
     # dropped partition invisible immediately, survivor intact
     assert _rows(spark, store) == [(2, "b", "d2")]
     assert fmt.list_partitions(store, "pbatch") == ["d2"]
@@ -244,6 +244,11 @@ def test_exists_and_has_data(fmt, spark, tmp_path):
     store = str(tmp_path / "t")
     assert not fmt.exists(store)
     assert not fmt.has_data(store)
+    # a never-committed store reads empty under an explicit schema and
+    # raises without one
+    assert fmt.read(spark, store, _SCHEMA).count() == 0
+    with pytest.raises(Exception):
+        fmt.read(spark, store)
     fmt.overwrite_partitions(_mk(spark, []).limit(0), store, "pbatch")
     assert fmt.exists(store)
     assert not fmt.has_data(store)  # committed but empty
@@ -264,7 +269,7 @@ def test_list_partitions_excludes_inflight(fmt, spark, tmp_path, monkeypatch):
             fmt.swap_rewrite(spark, store, _mk(spark, [(9, "z", "p9")]), "pbatch")
     assert len(os.listdir(str(tmp_path))) == 2  # the store and its stage
     assert fmt.list_partitions(store, "pbatch") == ["p0", "p1"]
-    fmt.repair(str(tmp_path), store)
+    fmt.repair(store)
     assert fmt.list_partitions(store, "pbatch") == ["p0", "p1"]
     assert _rows(spark, store) == [(1, "a", "p0"), (2, "b", "p1")]
 
@@ -302,6 +307,51 @@ def test_backends_expose_the_same_operations():
         }
 
     assert ops(ParquetSwapFormat) == ops(LogManifestFormat)
+
+
+def test_only_the_seam_knows_about_recovery():
+    """Recovery is the seam's job: no package module outside
+    ``table_format.py`` calls ``FORMAT.repair`` or spells a staging
+    name (a string constant, docstrings aside, holding ``__tmp_``,
+    ``__old_`` or ``__stage_``)."""
+    import ast
+
+    pkg = os.path.dirname(os.path.dirname(table_format.__file__))
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py") or name == "table_format.py":
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            docstrings = {
+                id(n.body[0].value)
+                for n in ast.walk(tree)
+                if isinstance(
+                    n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+                )
+                and n.body
+                and isinstance(n.body[0], ast.Expr)
+            }
+            where = f"{os.path.relpath(path, pkg)}:"
+            for n in ast.walk(tree):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "repair"
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id == "FORMAT"
+                ):
+                    found.append(f"{where}{n.lineno} calls FORMAT.repair")
+                elif (
+                    isinstance(n, ast.Constant)
+                    and isinstance(n.value, str)
+                    and id(n) not in docstrings
+                    and any(m in n.value for m in ("__tmp_", "__old_", "__stage_"))
+                ):
+                    found.append(f"{where}{n.lineno} spells {n.value!r}")
+    assert not found, found
 
 
 def test_publish_staged_artifact(fmt, tmp_path):
@@ -350,7 +400,10 @@ def test_parquet_swap_rewrite_crash_recoverable(spark, tmp_path, monkeypatch):
             FORMAT.swap_rewrite(spark, store, _mk(spark, [(9, "z", "p0")]))
         monkeypatch.setattr(os, "rename", real)
         assert not os.path.isdir(store)  # the crash window
-        FORMAT.repair(str(tmp_path), store)
+        # the next seam operation recovers the store by itself
+        assert FORMAT.exists(store)
+        assert _rows(spark, store) == [(1, "a", "p0"), (2, "b", "p1")]
+        FORMAT.repair(store)
         assert _rows(spark, store) == [(1, "a", "p0"), (2, "b", "p1")]
     finally:
         set_table_format(None)
@@ -385,7 +438,9 @@ def test_parquet_half_swap_rolls_back_on_repair(spark, tmp_path, monkeypatch):
             )
         monkeypatch.setattr(os, "rename", real)
         assert any("__old_" in d for d in os.listdir(store))
-        FORMAT.repair(str(tmp_path), store)
+        # the next seam operation rolls the half-swap back by itself
+        assert "p1" in FORMAT.list_partitions(store, "pbatch")
+        FORMAT.repair(store)
         assert _rows(spark, store) == [(1, "a", "p0"), (2, "b", "p1")]
         assert not [
             d for d in os.listdir(store) if "__old_" in d or "__tmp_" in d
@@ -435,8 +490,13 @@ def test_manifest_crash_before_commit_is_invisible(
     n_segs = len([d for d in os.listdir(store) if d.startswith("seg-")])
     assert n_segs == 2
     # ...but readers still see the previous snapshot, WITHOUT repair
-    assert _rows(spark, store) == [(1, "a", "p0"), (2, "b", "p1")]
-    mfmt.repair(str(tmp_path), store)
+    # (the backend's own read; FORMAT.read would repair first)
+    backend_rows = table_format._active().read(spark, store, _SCHEMA).collect()
+    assert sorted((r.k, r.v, r.pbatch) for r in backend_rows) == [
+        (1, "a", "p0"),
+        (2, "b", "p1"),
+    ]
+    mfmt.repair(store)
     assert len([d for d in os.listdir(store) if d.startswith("seg-")]) == 1
     assert _rows(spark, store) == [(1, "a", "p0"), (2, "b", "p1")]
     # the replayed batch converges
@@ -466,7 +526,7 @@ def test_manifest_crash_before_adoption_leaves_stage_sibling(
     monkeypatch.setattr(os, "rename", real)
     assert any("__stage_" in d for d in os.listdir(str(tmp_path)))
     assert _rows(spark, store) == [(1, "a", "p0")]
-    mfmt.repair(str(tmp_path), store)
+    mfmt.repair(store)
     assert not any("__stage_" in d for d in os.listdir(str(tmp_path)))
     assert _rows(spark, store) == [(1, "a", "p0")]
 
@@ -523,7 +583,7 @@ def test_manifest_read_never_sees_uncommitted(mfmt, spark, tmp_path):
             )
     assert not mfmt.exists(store)
     assert mfmt.read(spark, store, _SCHEMA).count() == 0
-    mfmt.repair(str(tmp_path), store)
+    mfmt.repair(store)
     assert not os.path.isdir(os.path.join(store, "seg-orphan"))
 
 
